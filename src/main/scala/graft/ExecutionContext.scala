@@ -62,7 +62,7 @@ class ExecutionContext(
   /** Register a parquet dataset as a queryable table (replaces the
     * hard-coded 3-table seed at `/root/reference/src/context.rs:17-34`). */
   def registerParquet(name: String, path: String): ExecutionContext = {
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    Tables.openParquet(spark, path).createOrReplaceTempView(name)
     this
   }
 
@@ -285,7 +285,7 @@ class ExecutionContext(
     sqlDmlSeq += 1
     val safe = table.replaceAll("[^A-Za-z0-9._-]", "_")
     val pid = ProcessHandle.current().pid()
-    s"/root/repo/target/dmltmp/sql/$safe/p$pid-c$sqlDmlCtx-s$sqlDmlSeq"
+    s"${Dml.scratchRoot}/sql/$safe/p$pid-c$sqlDmlCtx-s$sqlDmlSeq"
   }
 
   private def sqlAssignments(setList: String): Map[String, Column] =

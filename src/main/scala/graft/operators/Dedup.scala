@@ -634,7 +634,7 @@ object Dedup {
     * ManagedCache.releaseAll like every pipeline cache). */
   def loadDedupIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    ManagedCache.persist(spark.read.parquet(path))
+    ManagedCache.persist(Tables.openParquet(spark, path))
 
   /** The delta-vs-index stage shared by the live and loaded-index paths:
     * `prepOld` is an already-prepped (and persisted) corpus index frame. */

@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   */
 object Dml {
 
+  /** Root of every DML scratch store: `target/dmltmp` resolved against the
+    * working directory, so the catalog's DML builders and SQL DML run from
+    * any checkout (from the repo root it is the build's own `target/`). */
+  private[graft] def scratchRoot: String =
+    java.nio.file.Paths.get("target", "dmltmp").toAbsolutePath.toString
+
   /** Re-runnable scratch root; versions are overwritten per invocation so
     * repeated builder calls (bench warm-ups) stay idempotent. Keyed on the
     * SANITIZED sfDir string, not its hashCode — hashCode collides across
@@ -30,7 +36,7 @@ object Dml {
     * versions) and abs(Int.MinValue) is negative. */
   private[graft] def work(name: String, sfDir: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"/root/repo/target/dmltmp/$key/$name"
+    s"$scratchRoot/$key/$name"
   }
 
   // ---- minimal commit protocol ------------------------------------------
@@ -75,7 +81,7 @@ object Dml {
       if (fs.exists(p)) fs.delete(p, true)
     }
     commit(dir, name)
-    df.sparkSession.read.parquet(s"$dir/$name")
+    Tables.openParquet(df.sparkSession, s"$dir/$name")
   }
 
   /** The origin-split read of one committed version: the base data
@@ -86,19 +92,19 @@ object Dml {
   private def versionParts(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, version: String): (DataFrame, Option[DataFrame]) = {
-    val data = spark.read.parquet(versionPath(dir, version))
+    val data = Tables.openParquet(spark, versionPath(dir, version))
     val dvDir = java.nio.file.Paths.get(dir, s"${version}_dv")
     val dataLogical =
       if (!java.nio.file.Files.exists(dvDir)) data
       else {
-        val dv = spark.read.parquet(dvDir.toString)
+        val dv = Tables.openParquet(spark, dvDir.toString)
         val cond = data.columns.map(c => data(c) <=> dv(c)).reduce(_ && _)
         data.join(broadcast(dv), cond, "left_anti")
       }
     val apDir = java.nio.file.Paths.get(dir, s"${version}_append")
     val append =
       if (java.nio.file.Files.exists(apDir))
-        Some(spark.read.parquet(apDir.toString))
+        Some(Tables.openParquet(spark, apDir.toString))
       else None
     (dataLogical, append)
   }
@@ -369,7 +375,7 @@ object Dml {
     val matchedData = dataLogical.filter(coalesce(pred, lit(false)))
     val vector =
       if (Files.exists(curDv))
-        spark.read.parquet(curDv.toString).unionByName(matchedData)
+        Tables.openParquet(spark, curDv.toString).unionByName(matchedData)
       else matchedData
     // sidecar + data ref land BEFORE the pointer flips (commit is last),
     // so a concurrent reader resolves either the old or the new version
@@ -533,7 +539,7 @@ object Dml {
     // PREVIOUS incarnation's ${next}_dv orphaned under dir reuse
     val vector =
       if (Files.exists(curDvP))
-        spark.read.parquet(curDvP.toString).unionByName(matchedData)
+        Tables.openParquet(spark, curDvP.toString).unionByName(matchedData)
       else matchedData
     vector.write.mode(SaveMode.Overwrite).parquet(s"$dir/${next}_dv")
     val tmp = Paths.get(dir, s".${next}_ref.tmp.${Thread.currentThread.getId}")
@@ -887,8 +893,8 @@ object Dml {
       spark: org.apache.spark.sql.SparkSession,
       pathV1: String,
       pathV2: String): DataFrame = {
-    val sa = spark.read.parquet(pathV1).schema
-    val sb = spark.read.parquet(pathV2).schema
+    val sa = Tables.openParquet(spark, pathV1).schema
+    val sb = Tables.openParquet(spark, pathV2).schema
     val cols = (sa.map(_.name) ++ sb.map(_.name)).distinct
     val rows = cols.map { c =>
       val ta = sa.find(_.name == c).map(_.dataType.simpleString)

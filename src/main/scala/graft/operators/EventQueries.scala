@@ -1526,7 +1526,7 @@ object EventQueries {
   private def eventStream(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     Tables.ensureNanosConf(s) // the schema read below needs it too
-    val raw = s.read.parquet(Tables.path(d, "events"))
+    val raw = Tables.openParquet(s, Tables.path(d, "events"))
     Tables.eventsTsFromNanos(
       s.readStream.schema(raw.schema)
         .option("pathGlobFilter", "events.parquet")
@@ -1540,7 +1540,7 @@ object EventQueries {
     * s10 synthesizes its event-time). */
   private def docStream(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(Tables.path(d, "documents"))
+    val raw = Tables.openParquet(s, Tables.path(d, "documents"))
     s.readStream.schema(raw.schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)

@@ -461,7 +461,7 @@ object Mv {
     val measures = extractMeasures(mvDf)
     val (predConjuncts, predNotNullable, predRanges) =
       predInfo(filtered, where)
-    val mvBack = spark.read.parquet(mvPath)
+    val mvBack = Tables.openParquet(spark, mvPath)
     val mvRel = leafRelation(mvBack.queryExecution.analyzed).get
     val mvRows = Mv.withDisabled { mvBack.count() }
     BuiltSummary(measures, predConjuncts, predNotNullable, predRanges,
@@ -501,7 +501,7 @@ object Mv {
     val plain = dvRows == 0 && appendRows == 0
     val (roots, meta, fp) =
       if (plain)
-        leafRelation(spark.read.parquet(dataPath)
+        leafRelation(Tables.openParquet(spark, dataPath)
             .queryExecution.analyzed) match {
           case Some(leaf) =>
             val m = fileMeta(leaf)
@@ -569,7 +569,7 @@ object Mv {
     }
 
   private def refreshFiles(spark: SparkSession, d: MvDef): (Int, Int) = {
-    val baseNow = spark.read.parquet(d.baseRoots.toSeq: _*)
+    val baseNow = Tables.openParquet(spark, d.baseRoots.toSeq: _*)
     val leaf = leafRelation(baseNow.queryExecution.analyzed).get
     val nowMeta = fileMeta(leaf)
     // a path that vanished OR changed content in place ((len, mtime)
@@ -592,7 +592,7 @@ object Mv {
     }
     val delta = (nowMeta.keySet -- d.baseMeta.keySet).toSeq
     if (delta.isEmpty) return (0, nowMeta.size)
-    val deltaRaw = spark.read.parquet(delta: _*)
+    val deltaRaw = Tables.openParquet(spark, delta: _*)
     // a partial MV aggregates only predicate rows — the delta must too
     val deltaDf = d.whereCol.map(deltaRaw.filter).getOrElse(deltaRaw)
     val deltaAgg = deltaDf.groupBy(d.dimCols.map(deltaRaw(_)): _*)
@@ -622,7 +622,7 @@ object Mv {
   private def foldDelta(
       spark: SparkSession, d: MvDef, deltaAgg: DataFrame)
       : (String, LogicalRelation, Long) = {
-    val oldMv = spark.read.parquet(d.mvPath)
+    val oldMv = Tables.openParquet(spark, d.mvPath)
     import org.apache.spark.sql.functions.{col, hll_union_agg, max => fmax, min => fmin, sum => fsum}
     val folds = d.measures.values.toSeq.map { case (kind, name) =>
       val t = oldMv.schema(name).dataType
@@ -644,7 +644,7 @@ object Mv {
     Mv.withDisabled {
       folded.write.mode(SaveMode.Overwrite).parquet(newPath)
     }
-    val newBack = spark.read.parquet(newPath)
+    val newBack = Tables.openParquet(spark, newPath)
     val newRel = leafRelation(newBack.queryExecution.analyzed).get
     val newRows = Mv.withDisabled { newBack.count() }
     (newPath, newRel, newRows)
@@ -690,8 +690,8 @@ object Mv {
     // count means equal content): classify the append transition.
     // Versions are immutable, so the REGISTERED version's append dir
     // is still on disk to diff against.
-    val oldAppend = ss.appendPath.map(spark.read.parquet(_))
-    val newAppend = curAppendP.map(spark.read.parquet(_))
+    val oldAppend = ss.appendPath.map(Tables.openParquet(spark, _))
+    val newAppend = curAppendP.map(Tables.openParquet(spark, _))
     (oldAppend, newAppend) match {
       case (Some(o), None) =>
         if (Mv.withDisabled { o.isEmpty }) anchorOnly(spark, d, cur,
@@ -1054,7 +1054,7 @@ object Mv {
         case Some(st) => Dml.currentVersion(st.storeDir) == st.version
         case None =>
           try {
-            val cur = spark.read.parquet(d.baseRoots.toSeq: _*)
+            val cur = Tables.openParquet(spark, d.baseRoots.toSeq: _*)
               .queryExecution.analyzed.collectLeaves()
               .collectFirst { case l: LogicalRelation => l }
             cur.exists(fingerprintOf(_) == d.baseFilesFp)

@@ -878,4 +878,21 @@ class DmlSpec extends SparkSpec {
       restore("spark.graft.dv.autoCompactMinRows", savedMin)
     }
   }
+
+  test("SQL UPDATE lands under target/dmltmp of the working directory") {
+    val c = new ExecutionContext(spark)
+    Tables.t(spark, sf, "nation").createOrReplaceTempView("spec_dml_root")
+    try {
+      c.execute(
+        "UPDATE spec_dml_root SET n_name = 'MOVED' WHERE n_nationkey = 1")
+      val root = java.nio.file.Paths.get(System.getProperty("user.dir"),
+        "target", "dmltmp", "sql", "spec_dml_root")
+      val files = spark.table("spec_dml_root").inputFiles
+        .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
+      assert(files.nonEmpty && files.forall(_.startsWith(s"$root/")),
+        s"update files outside $root: ${files.mkString(", ")}")
+      assert(spark.table("spec_dml_root")
+        .filter(col("n_name") === "MOVED").count() == 1)
+    } finally spark.catalog.dropTempView("spec_dml_root")
+  }
 }

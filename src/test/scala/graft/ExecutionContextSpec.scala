@@ -952,7 +952,7 @@ object ExecutionContextSpec {
     * newest entry under the view's root. */
   def sqlDmlDirOf(
       spark: org.apache.spark.sql.SparkSession, table: String): String = {
-    val root = new java.io.File(s"/root/repo/target/dmltmp/sql/$table")
+    val root = new java.io.File(s"${Dml.scratchRoot}/sql/$table")
     val dirs = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory)
     require(dirs.nonEmpty, s"no SQL DML work dirs under $root")

@@ -24,42 +24,39 @@ object GraftFunctions {
       s"$fn: $arg must be an integer literal, got $other")
   }
 
+  /** Registry entry of a [[Kernel]]: `arrays` array arguments, then one
+    * integer literal per name in `ints`. */
+  private def kernel(name: String, usage: String, arrays: Int, ints: String*) =
+    (name, classOf[Kernel], arrays + ints.size, usage,
+      (c: Seq[Expression]) => Kernel(name, c.take(arrays),
+        c.drop(arrays).zip(ints).map { case (e, arg) =>
+          intLit(e, usage.split(" - ").head, arg) }))
+
   /** (name, implementing class, arity, DESCRIBE FUNCTION usage, builder). */
   val all: Seq[(String, Class[_], Int, String, Seq[Expression] => Expression)] =
     Seq(
-      ("cosine_sim", classOf[CosineSimilarity], 2,
-        "cosine_sim(a, b) - Cosine similarity of two array<float> " +
-          "embeddings (double; NaN when either norm is 0).",
-        (c: Seq[Expression]) => CosineSimilarity(c(0), c(1))),
-      ("norm_l2", classOf[NormL2], 1,
-        "norm_l2(v) - L2 norm of an array<float> embedding.",
-        (c: Seq[Expression]) => NormL2(c(0))),
-      ("sign_bucket", classOf[SignBucket], 2,
-        "sign_bucket(vec, bits) - LSH sign bucket: an int whose bit i is " +
-          "the sign of vec against deterministic random plane i.",
-        (c: Seq[Expression]) => SignBucket(
-          c(0), intLit(c(1), "sign_bucket(vec, bits)", "bits"))),
-      ("simhash64", classOf[SimHash64], 1,
+      kernel("cosine_sim",
+        "cosine_sim(a, b) - Cosine similarity (double; NaN when either " +
+          "norm is 0) of two array<float> or array<double> vectors.", 2),
+      kernel("norm_l2",
+        "norm_l2(v) - L2 norm of an array<float> or array<double> vector.", 1),
+      kernel("sign_bucket",
+        "sign_bucket(vec, bits) - LSH sign bucket: a bigint whose bit i is " +
+          "the sign of vec against deterministic random plane i.", 1, "bits"),
+      kernel("simhash64",
         "simhash64(tokens) - 64-bit SimHash of an array<string> token " +
-          "array (majority vote over xxhash64 token bits).",
-        (c: Seq[Expression]) => SimHash64(c(0))),
-      ("minhash_sig", classOf[MinHashSig], 2,
+          "array (majority vote over xxhash64 token bits).", 1),
+      kernel("minhash_sig",
         "minhash_sig(shingle_hashes, k) - k-permutation minhash " +
-          "signature (array<bigint>) of pre-hashed shingles.",
-        (c: Seq[Expression]) => MinHashSig(
-          c(0), intLit(c(1), "minhash_sig(shingle_hashes, k)", "k"))),
-      ("shingle_hashes", classOf[ShingleHashes], 2,
+          "signature (array<bigint>) of pre-hashed shingles.", 1, "k"),
+      kernel("shingle_hashes",
         "shingle_hashes(tokens, n) - DISTINCT n-gram shingle hashes " +
           "(array<bigint>, first-occurrence order) — the set form for " +
-          "jaccard/minhash.",
-        (c: Seq[Expression]) => ShingleHashes(
-          c(0), intLit(c(1), "shingle_hashes(tokens, n)", "n"))),
-      ("shingle_hashes_all", classOf[ShingleHashes], 2,
+          "jaccard/minhash.", 1, "n"),
+      kernel("shingle_hashes_all",
         "shingle_hashes_all(tokens, n) - EVERY n-gram window hash in " +
           "position order (multiset) — the form for frequency signals.",
-        (c: Seq[Expression]) => ShingleHashes(
-          c(0), intLit(c(1), "shingle_hashes_all(tokens, n)", "n"),
-          distinct = false)),
+        1, "n"),
       // aggregate: the analyzer wraps a registered AggregateFunction in
       // AggregateExpression itself, so the builder returns it bare
       ("topk_neighbors", classOf[TopKNeighbors], 3,

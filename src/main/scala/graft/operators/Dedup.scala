@@ -307,10 +307,10 @@ object Dedup {
   def minhashPrep(docs: DataFrame, shingleN: Int, k: Int): DataFrame =
     spread(docs).select(
       col("doc_id"),
-      // native codegen'd shingling (TextExpressions.ShingleHashes): one
+      // native shingling (Kernels.shingle_hashes): one
       // fused hash+fold+distinct pass, bit-identical to the HOF chain
       TextExpressions.shingleHashes(tokens(col("text")), shingleN).as("shh"))
-      // native codegen'd signature (TextExpressions.MinHashSig): one fused
+      // native signature (Kernels.minhash_sig): one fused
       // loop, bit-identical to the interpreted HOF form
       // (TextFunctions.minhashSignature — kept as the DedupSpec cross-check)
       .withColumn("sig", TextExpressions.minhashSig(col("shh"), k))
@@ -771,7 +771,7 @@ object Dedup {
         s"got maxHamming=$maxHamming chunks=$chunks")
     val bitsPer = 64 / chunks
     val mask = (1L << bitsPer) - 1
-    // Native codegen'd expression (TextExpressions.SimHash64): one fused
+    // Native kernel (Kernels.simhash64): one fused
     // loop per row, bit-identical to the interpreted HOF formulation
     // (TextFunctions.simhash64 — kept as the cross-check in DedupSpec).
     val withSig = spread(docs)
@@ -1114,7 +1114,7 @@ object Dedup {
     * map-side [[rowChunkFold]]. */
   private[graft] def cdcChunks(docsIn: DataFrame): DataFrame =
     spread(docsIn)
-      // r18: native codegen chunker (TextExpressions.CdcChunks) — the
+      // r18: native chunker (Kernels.cdc_chunks) — the
       // interpreted aggregate-HOF fold paid an md5 hex string per token
       // and an O(chunk²) concat_ws rebuild per appended token
       .select(col("doc_id"),
@@ -1520,7 +1520,7 @@ object DedupQueries {
 
     // Benchmark DECONTAMINATION — the release-gate check that a held-out
     // test split shares no long n-grams with the training split: 8-gram
-    // shingle hashes per doc (native ShingleHashes — pre-distinct), train
+    // shingle hashes per doc (native shingle_hashes — pre-distinct), train
     // grams deduped, one equi-join on the gram key, per-test-doc overlap
     // counts. Scale: the same inverted-index shape as d07 but only
     // CROSS-SPLIT matches survive and both sides are deduped, so cost is
@@ -2576,7 +2576,7 @@ object DedupQueries {
     // that tells you WHICH crawls/dumps overlap before you pay for pairwise
     // doc dedup between them; t24 is the unigram-vocabulary analogue, this
     // is the verbatim-passage one). Shape: ONE scan → per-source DISTINCT
-    // gram hashes (native ShingleHashes, persisted — the frame feeds the
+    // gram hashes (native shingle_hashes, persisted — the frame feeds the
     // per-source totals AND both self-join sides), gram-keyed self-join
     // (per-gram multiplicity ≤ #sources, so the join output is bounded by
     // grams × sources², never docs²), pair partial-agg, then the tiny

@@ -820,7 +820,7 @@ object EventQueries {
           .filter(col("d0") =!= col("d1")).select(col("h"))
           .withColumn("_dup", lit(1L))
         val chunks = docStream(s, d)
-          // r18: native codegen chunker (TextExpressions.CdcChunks) —
+          // r18: native chunker (Kernels.cdc_chunks) —
           // stateless per-row, so still streaming-safe
           .select(col("doc_id"),
             explode(TextExpressions.cdcChunks(

@@ -343,7 +343,7 @@ object SamplingQueries {
           .select(col("doc_id"),
             md5(concat(lit("0:"), col("doc_id").cast("string"))).as("k"),
             // r18: native codegen'd md5-vocab ids
-            // (TextExpressions.Md5WordIds) — the filter+transform HOF
+            // (Kernels.md5_word_ids) — the filter+transform HOF
             // pair ran interpreted with a hex-string build + string
             // parse per token; bit-identical (SamplingSpec asserts)
             concat(TextExpressions.md5WordIds(

@@ -214,7 +214,7 @@ object Similarity {
 
   /** Exact brute-force top-k cosine neighbors for each query vector.
     * `queries` and `corpus` both carry (idCol, embedding). Scoring uses the
-    * native codegen'd [[CosineSimilarity]] expression — one fused loop per
+    * native [[Kernels.cosine_sim]] kernel — one fused loop per
     * pair inside whole-stage codegen (vs three interpreted lambda trees for
     * the `aggregate`/`zip_with` composition). */
   def bruteForceTopK(
@@ -564,7 +564,7 @@ object Similarity {
         transform(col("qv"), x => x.cast("long")).as("qvl")))
     val cent = labelCentroids(q)
     // r17 optimization (guide §4): i1/i2 via the native fused-loop
-    // LongDot expression instead of interpreted aggregate/zip_with HOFs —
+    // long_dot kernel instead of interpreted aggregate/zip_with HOFs —
     // the per-(vector, candidate-label) dot was walking two lambda trees
     // per dimension outside codegen. Exact integer math, outputs
     // bit-identical (same sums).
@@ -615,7 +615,7 @@ object Similarity {
     val seeds = q.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster_id"), col("qvl").as("cv"))
       .withColumn("i3", VectorExpressions.longDot(col("cv"), col("cv")))
-    // native LongDot for the per-(vector, seed) integer sums (e12's r17
+    // native long_dot for the per-(vector, seed) integer sums (e12's r17
     // rewire) — identical exact-integer outputs, fused codegen loop
     val scored = q
       .withColumn("i2", VectorExpressions.longDot(col("qvl"), col("qvl")))
@@ -1831,7 +1831,7 @@ object SimilarityQueries {
     // float-fold order cannot wobble the hash. Round-half-up on x/scale
     // agrees across engines (both round ties away from zero). HOF
     // (interpreted) is fine here: not a bench path; promote to a native
-    // expression like NormL2 if it ever becomes one.
+    // kernel like norm_l2 if it ever becomes one.
     Q("e06_embedding_quantize",
       (s, d) => quantizeInt8(Tables.t(s, d, "embeddings")),
       Some("""WITH v AS (SELECT vec_id, embedding,

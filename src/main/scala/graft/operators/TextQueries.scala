@@ -479,7 +479,7 @@ object CorpusStats {
     // r17 optimization (guide §2.4 — the per-(doc, term) tf is a function
     // of the document alone, so NO corpus-scale explode or (doc, term)
     // exchange is fundamentally required): one native term_counts walk
-    // per row (TextExpressions.TermCounts — |q| counts in one codegen'd
+    // per row (Kernels.term_counts — |q| counts in one codegen'd
     // pass) replaces `explode(tokens) → isin filter → groupBy(doc, dl, w)`.
     // The only remaining shuffle is the 1-row corpus/df aggregate, which
     // now also carries each term's df (docs with tf > 0 — identical to
@@ -1067,7 +1067,7 @@ object TextQueries {
       // r17 optimization (guide §2.4): both signals are PER-DOCUMENT
       // multiset statistics of the doc's own gram stream, so no shuffle is
       // fundamentally required — the native gram_stats reduction
-      // (TextExpressions.GramStats: one bounded hash-map pass per row over
+      // (Kernels.gram_stats: one bounded hash-map pass per row over
       // the same shingle_hashes_all values) computes (top, n, distinct)
       // inside the scan, replacing two corpus-scale explodes, three
       // exchanges and a doc-keyed join with zero shuffles. Counts are
@@ -1425,7 +1425,7 @@ object TextQueries {
     // shared/total). Low-novelty docs are near-copies or heavy
     // boilerplate; p02 applies the same idea cross-SPLIT, this applies
     // it per-doc corpus-wide. Shape at 100 TB: ONE scan → per-doc
-    // distinct 8-gram hashes (native ShingleHashes, persisted — the
+    // distinct 8-gram hashes (native shingle_hashes, persisted — the
     // frame feeds both the df aggregate and the join), gram-df
     // partial-agg, one join on the gram key (planner-decided; d07's
     // inverted-index shape), per-doc count. Spark joins 64-bit gram

@@ -256,16 +256,17 @@ class ExecutionContext(
   }
 
   // ---- SQL DML bridge ----------------------------------------------------
-  // The reference PLANS `UPDATE … [FROM …] [WHERE …]` and
-  // `DELETE FROM … [WHERE …]` as SQL statements (`tmp/crud.txt:203-301`);
-  // Spark rejects UPDATE/DELETE on file-backed relations outright, so the
-  // statements route through the Dml copy-on-write store instead: read
-  // the current table, publish the next committed version under a
-  // per-statement work dir (never overwriting a directory that is being
-  // read), and re-register the RESULT as the session's view of that
-  // table — SELECTs after the statement see the new state, exactly the
-  // session semantics a reference user has. Statement-session views
-  // SHADOW same-named catalog tables by design (temp view precedence).
+  // The reference PLANS `INSERT`, `UPDATE … [FROM …] [WHERE …]`,
+  // `DELETE FROM … [WHERE …]` and MERGE as SQL statements
+  // (`tmp/crud.txt:203-301`); Spark rejects UPDATE/DELETE on file-backed
+  // relations outright, so statements against a session view route
+  // through a Dml versioned store instead ([[sqlCommit]]): the first
+  // statement publishes the view as the store's v0, every statement
+  // commits only its change as the next version, and the RESULT is
+  // re-registered as the session's view of that table — SELECTs after the
+  // statement see the new state, exactly the session semantics a
+  // reference user has. Statement-session views SHADOW same-named catalog
+  // tables by design (temp view precedence).
 
   // Work dirs are keyed by (JVM pid, per-JVM context id, per-context
   // sequence) on top of the table name — Dml.work's discipline: two
@@ -275,17 +276,41 @@ class ExecutionContext(
   private val sqlDmlCtx = ExecutionContext.nextCtxId()
   private var sqlDmlSeq = 0
 
-  /** Per-view dv-merge continuity: (committed store dir, the exact
-    * DataFrame last published to the view from it). Lets repeated
-    * dv-mode MERGEs extend one version chain instead of re-snapshotting
-    * the table per statement. */
-  private val dvMergeState =
+  /** Per-view store continuity: (committed store dir, the exact
+    * DataFrame last published to the view from it). Lets repeated DML
+    * statements on one view extend one version chain instead of
+    * re-publishing the table per statement. */
+  private val dmlStores =
     scala.collection.mutable.Map[String, (String, DataFrame)]()
   private def sqlDmlDir(table: String): String = {
     sqlDmlSeq += 1
     val safe = table.replaceAll("[^A-Za-z0-9._-]", "_")
     val pid = ProcessHandle.current().pid()
     s"${Dml.scratchRoot}/sql/$safe/p$pid-c$sqlDmlCtx-s$sqlDmlSeq"
+  }
+
+  /** Run one DML statement against the view `table` as a change commit
+    * on its store, and re-register the result as the view. The store
+    * continues when the view still holds exactly what this context last
+    * published to it (`sameResult`); a view re-registered elsewhere in
+    * between (ALTER, a plain createOrReplaceTempView, another context)
+    * is published as v0 of a fresh store — never grafted onto a chain it
+    * no longer equals. */
+  private def sqlCommit(table: String)(change: String => DataFrame)
+      : DataFrame = {
+    val view = spark.table(table)
+    val dir = dmlStores.get(table).collect {
+      case (d, published) if view.queryExecution.analyzed
+          .sameResult(published.queryExecution.analyzed) => d
+    }.getOrElse {
+      val d = sqlDmlDir(table)
+      Dml.publish(view, d)
+      d
+    }
+    val out = change(dir)
+    dmlStores(table) = (dir, out)
+    out.createOrReplaceTempView(table)
+    out
   }
 
   private def sqlAssignments(setList: String): Map[String, Column] =
@@ -303,50 +328,38 @@ class ExecutionContext(
       fromTable: Option[String],
       whereExpr: Option[String]): DataFrame = {
     requireTable(table)
-    val base = spark.table(table)
     val pred = whereExpr.map(expr).getOrElse(lit(true))
-    val out = fromTable match {
-      case Some(src) =>
-        requireTable(src)
-        // UPDATE t SET … FROM s WHERE …: qualify columns by the TABLE
-        // NAMES (the aliases the join uses), per the reference's planned
-        // join-form update
-        Dml.updateFrom(base, sqlDmlDir(table), spark.table(src),
-          pred, sqlAssignments(setList),
-          targetAlias = table, sourceAlias = src)
-      case None =>
-        Dml.update(base, sqlDmlDir(table), pred, sqlAssignments(setList))
+    fromTable.foreach(requireTable)
+    sqlCommit(table) { dir =>
+      fromTable match {
+        case Some(src) =>
+          // UPDATE t SET … FROM s WHERE …: qualify columns by the TABLE
+          // NAMES (the aliases the join uses), per the reference's
+          // planned join-form update
+          Dml.updateFromLatest(spark, dir, spark.table(src),
+            pred, sqlAssignments(setList),
+            targetAlias = table, sourceAlias = src)
+        case None =>
+          Dml.updateLatest(spark, dir, pred, sqlAssignments(setList))
+      }
     }
-    out.createOrReplaceTempView(table)
-    out
   }
 
   private def sqlDelete(
       table: String, whereExpr: Option[String]): DataFrame = {
     requireTable(table)
     val pred = whereExpr.map(expr).getOrElse(lit(true))
-    // DELETE strategy is a session choice (`spark.graft.delete.mode`):
-    // "rewrite" (default) publishes the surviving complement —
-    // O(table) write; "dv" commits a deletion vector
-    // ([[Dml.deleteWithDv]]) — O(deleted rows) write, the right mode
-    // for small deletes against a large table. Either mode yields the
-    // same logical state (m26 shares m04's oracle under the hash gate).
-    val out =
-      spark.conf.get("spark.graft.delete.mode", "rewrite") match {
-        case "dv" => Dml.deleteWithDv(spark.table(table),
-          sqlDmlDir(table), pred)
-        case _ => Dml.delete(spark.table(table), sqlDmlDir(table), pred)
-      }
-    out.createOrReplaceTempView(table)
-    out
+    sqlCommit(table)(Dml.deleteLatest(spark, _, pred))
   }
 
   /** MERGE INTO <t> USING <s> ON <cond>
     * WHEN MATCHED THEN UPDATE SET <assignments>
-    * [WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (exprs)] — the
-    * supported MERGE subset (one update action, one optional insert
-    * action; no DELETE action, no AND-guards). Routes through
-    * [[Dml.merge]]'s copy-on-write store like UPDATE/DELETE; columns in
+    * [WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (exprs)]
+    * [WHEN NOT MATCHED BY SOURCE THEN DELETE] — the supported MERGE
+    * subset (one update action, one optional insert action, the
+    * optional SYNC clause; no AND-guards). Commits through
+    * [[Dml.mergeOnRead]] on the view's store like every SQL DML
+    * statement ([[sqlCommit]]); columns in
     * the ON/SET/VALUES texts qualify by the declared aliases (or the
     * table names when no alias is given). */
   private def sqlMerge(
@@ -361,14 +374,14 @@ class ExecutionContext(
     val sAlias = srcAlias.getOrElse(src)
     // SET keys may qualify by the target alias OR the raw table name —
     // strip either; the assignment applies to the target column by name.
-    // Every stripped key must BE a target column: Dml.merge matches
+    // Every stripped key must BE a target column: Dml.mergeOnRead matches
     // assignments by name and would silently drop an unknown key (typo'd
     // column, source-alias qualification), yielding a silently wrong
     // MERGE instead of an error. Identifier comparison follows
     // spark.sql.caseSensitive (default false — `SET N_NAME = …` against
     // column n_name is valid SQL and must resolve, not throw); the
     // assignment key is canonicalized to the target column's declared
-    // spelling so Dml.merge's exact-name matching downstream still hits.
+    // spelling so the exact-name matching downstream still hits.
     val caseSensitive =
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
     def norm(s: String): String =
@@ -387,7 +400,7 @@ class ExecutionContext(
       canonical.get -> v
     }
     // Canonicalize INSERT column names the same way — and REQUIRE each to
-    // be a real target column: Dml.merge aligns them against the target
+    // be a real target column: Dml aligns them against the target
     // schema by exact name, so a case-mismatched OR typo'd column would
     // otherwise silently NULL-fill the real column and drop the value
     // (the same silent-wrong class the SET guard above rejects).
@@ -402,49 +415,10 @@ class ExecutionContext(
       })
     val vals = insVals.map(ExecutionContext.splitList(_)
       .map(v => expr(v.trim)))
-    // MERGE commit strategy is a session choice (`spark.graft.merge
-    // .mode`): "rewrite" (default) publishes the merged table —
-    // O(table) write; "dv" commits merge-on-read ([[Dml.mergeOnRead]]).
-    // The FIRST dv merge against a view pays an O(table) v0 snapshot
-    // (the store needs committed data files to address); every later
-    // dv merge on the same view REUSES that committed dir and extends
-    // the version chain at O(changed rows) — the small-repeated-upsert
-    // case dv mode exists for. The reuse guard is sameResult against
-    // the state this context last published for the view: any
-    // interleaved rewrite-path DML re-registers the view under a
-    // different plan and safely falls back to a fresh snapshot. Either
-    // mode yields the same logical state (m28 shares m11's oracle
-    // under the hash gate). The SYNC clause (WHEN NOT MATCHED BY
-    // SOURCE THEN DELETE) always takes the rewrite path: it touches
-    // the whole non-matched complement, so a merge-on-read commit
-    // would still be O(table) — nothing to save.
-    val mor = !bySourceDelete &&
-      spark.conf.get("spark.graft.merge.mode", "rewrite") == "dv"
-    val out =
-      if (mor) {
-        val priorDir = dvMergeState.get(table).collect {
-          case (d, published)
-              if spark.table(table).queryExecution.analyzed
-                .sameResult(published.queryExecution.analyzed) => d
-        }
-        val dvDir = priorDir.getOrElse(sqlDmlDir(table))
-        val o =
-          if (priorDir.isDefined)
-            Dml.mergeOnRead(spark, dvDir, spark.table(src), expr(onText),
-              assignments, cols, vals,
-              targetAlias = tAlias, sourceAlias = sAlias)
-          else
-            Dml.mergeWithDv(spark.table(table), dvDir, spark.table(src),
-              expr(onText), assignments, cols, vals,
-              targetAlias = tAlias, sourceAlias = sAlias)
-        dvMergeState(table) = (dvDir, o)
-        o
-      } else Dml.merge(spark.table(table), sqlDmlDir(table),
-        spark.table(src), expr(onText), assignments, cols, vals,
-        targetAlias = tAlias, sourceAlias = sAlias,
-        notMatchedBySourceDelete = bySourceDelete)
-    out.createOrReplaceTempView(table)
-    out
+    sqlCommit(table)(Dml.mergeOnRead(spark, _, spark.table(src),
+      expr(onText), assignments, cols, vals,
+      targetAlias = tAlias, sourceAlias = sAlias,
+      notMatchedBySourceDelete = bySourceDelete))
   }
 
   /** CREATE MATERIALIZED VIEW <n> AS SELECT … FROM <t>
@@ -602,7 +576,7 @@ class ExecutionContext(
   /** INSERT INTO <view> [(cols)] VALUES …/SELECT … — rows bind
     * POSITIONALLY to the column list (or the table's column prefix),
     * reference semantics; omitted columns fill with typed NULL via
-    * [[Dml.insertValues]]'s alignment. */
+    * [[Dml.insertLatest]]'s alignment. */
   private def sqlInsert(
       table: String,
       colList: Option[String],
@@ -615,10 +589,7 @@ class ExecutionContext(
     require(names.length == rows.columns.length,
       s"INSERT column count ${names.length} != value arity " +
         s"${rows.columns.length}")
-    val out = Dml.insertValues(base, rows.toDF(names: _*),
-      sqlDmlDir(table))
-    out.createOrReplaceTempView(table)
-    out
+    sqlCommit(table)(Dml.insertLatest(spark, _, rows.toDF(names: _*)))
   }
 
   /** Execute every statement; returns the last non-empty result — the

@@ -85,8 +85,8 @@ trait IndexSupport { self: ExecutionContext =>
           // whose steady state is sub-second). The copy is reusable
           // iff the SOURCE IS BYTE-IDENTICAL: fingerprint = the
           // source's input files + key + bucket spec. Immutable
-          // fixtures keep their paths; DML copy-on-write produces new
-          // version dirs, so any update changes the fingerprint and
+          // fixtures keep their paths; every DML commit adds new
+          // version files, so any update changes the fingerprint and
           // forces a rebuild. An empty inputFiles (non-file source)
           // never elides.
           val src = spark.table(table)
@@ -123,7 +123,7 @@ trait IndexSupport { self: ExecutionContext =>
       // STALENESS GUARD — the copy serves only while provably current:
       // the build ledger must still carry this physical table AND the
       // base table's input files must equal the fingerprint captured at
-      // build time. DML on the base (copy-on-write: new version dirs →
+      // build time. DML on the base (each commit adds sidecar files →
       // new input files) or a DROP INDEX from any context (ledger entry
       // removed with the physical drop) silently falls back to the base
       // table — same rows as an index-maintaining engine, minus the

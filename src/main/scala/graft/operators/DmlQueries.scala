@@ -3,19 +3,24 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** DML operators — INSERT (VALUES / SELECT), UPDATE, DELETE — executed for
-  * real as copy-on-write parquet versions (the reference only prints the
-  * plans: insert `/root/reference/tmp/crud.txt:178-221`, update `:223-279`,
-  * delete `:480-504`; nothing ever mutates state there).
+/** DML operators — INSERT (VALUES / SELECT), UPDATE, DELETE, MERGE —
+  * executed for real against a versioned parquet store (the reference
+  * only prints the plans: insert `tmp/crud.txt:178-221`, update
+  * `:223-279`, delete `:480-504`; nothing ever mutates state there).
   *
-  * Model: each statement materializes a new immutable version directory
-  * (`v0` = base snapshot, `v1` = post-mutation). Readers always see a
-  * complete version — the copy-on-write discipline every lakehouse format
-  * (Delta/Iceberg/Hudi) uses, minus the transaction log. At 100 TB a real
-  * deployment adds the log for atomic commit + concurrent readers; the
-  * write path (rewrite-changed-files, never in-place) is the same, and
-  * UPDATE/DELETE stay O(table-rewrite) worst case / O(matched-files) with
-  * file-level pruning.
+  * Model: a store directory holds immutable versions behind a commit
+  * pointer. `v0` is a plain parquet snapshot; every statement after it
+  * commits ONLY ITS CHANGE ([[commitChange]]): the new version reuses the
+  * current data directory untouched (a `_ref` file), records removed
+  * base rows in a `_dv` deletion-vector sidecar and carries added rows
+  * in an `_append` sidecar, so a 0.01% change writes O(changed rows),
+  * not O(table). Readers compose (data − vector) ∪ append and always see
+  * a complete version. A full rewrite happens only where it is the
+  * point: the v0 publish of an external table ([[publish]]),
+  * [[optimize]], [[restore]] and compaction — sidecar auto-compaction,
+  * and the folded commit of a one-shot external-base statement or of a
+  * shallow clone's first change — the Delta/Iceberg deletion-vector /
+  * merge-on-read shape, minus the transaction log.
   *
   * Every query returns the FINAL TABLE STATE so the DuckDB oracle can
   * express the same result purely relationally (UNION ALL for insert,
@@ -57,9 +62,8 @@ object Dml {
   }
 
   /** Read the committed version of the table at `dir` (ref-aware, so a
-    * freshly shallow-cloned table resolves to its source's data, and
-    * DV-aware via [[readVersion]], so a deletion-vector commit reads as
-    * data minus vector). */
+    * change commit or a freshly shallow-cloned table resolves to the data
+    * directory it reuses, and sidecar-aware via [[readVersion]]). */
   def readLatest(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val v = java.nio.file.Files
@@ -67,6 +71,9 @@ object Dml {
     readVersion(spark, dir, v)
   }
 
+  /** Publish `df` as the PLAIN version `name` — the store's only full
+    * write, reached from [[publish]], [[optimize]], [[restore]] and
+    * compaction ([[maybeAutoCompact]] and a folded [[commitChange]]). */
   private def snapshot(df: DataFrame, dir: String, name: String): DataFrame = {
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
     // a snapshot publishes a PLAIN version; work dirs are deterministic
@@ -84,11 +91,20 @@ object Dml {
     Tables.openParquet(df.sparkSession, s"$dir/$name")
   }
 
+  /** Publish an external table as the store's plain `v0` — the O(table)
+    * write a store pays once, before its change commits. `base` must not
+    * read from `dir` itself (the write would overwrite its own input):
+    * statements against a committed store use the chained forms. */
+  private[graft] def publish(base: DataFrame, dir: String): DataFrame =
+    snapshot(base, dir, "v0")
+
+  private def nextVersion(cur: String): String =
+    "v" + (cur.stripPrefix("v").toInt + 1)
+
   /** The origin-split read of one committed version: the base data
     * directory with its vector applied (`dataLogical`) and the append
-    * sidecar, if any — the shared kernel of [[readVersion]],
-    * [[dvDeleteLatest]] and [[mergeOnRead]] (one implementation of the
-    * vector semantics, not three hand-maintained copies). */
+    * sidecar, if any — the shared kernel of [[readVersion]] and
+    * [[commitChange]] (one implementation of the vector semantics). */
   private def versionParts(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, version: String): (DataFrame, Option[DataFrame]) = {
@@ -109,70 +125,243 @@ object Dml {
     (dataLogical, append)
   }
 
-  /** INSERT INTO t [(cols)] VALUES (...), (...): publish `v1 = v0 ∪ rows`
-    * and flip the commit pointer — the same copy-on-write discipline as
-    * update/delete. The committed v0 directory is never touched, so a
-    * concurrent reader resolving `_latest` can never observe half an
-    * insert. (A real log would record just the ADDED files instead of
-    * rewriting; the atomicity contract is identical.)
+  // ---- the one write path ------------------------------------------------
+
+  /** The rows a statement removes, selected per origin: `(rows, false)`
+    * yields the removed rows, `(rows, true)` their complement. */
+  private type Removal = (DataFrame, Boolean) => DataFrame
+
+  /** One statement's change against the committed table: the rows it
+    * removes (per origin) and the rows it adds, computed from the
+    * logical table. */
+  private case class Change(
+      removed: Option[Removal], added: DataFrame => Seq[DataFrame])
+
+  /** WHERE semantics: a NULL predicate removes nothing. The vector, the
+    * kept append rows and the images each select with the predicate, so
+    * it must select the same rows every time: a non-deterministic one
+    * (`rand()`, `uuid()`) could remove a row without appending its image
+    * or the reverse, and a vector of full rows cannot say which of two
+    * equal tuples it removed. Such a predicate is rejected (Delta rejects
+    * it too); a non-deterministic join condition already fails Spark's
+    * analysis. */
+  private def where(pred: org.apache.spark.sql.Column): Removal =
+    (rows, keep) => {
+      val hit = coalesce(pred, lit(false))
+      val out = rows.filter(if (keep) !hit else hit)
+      require(out.queryExecution.analyzed.expressions.forall(_.deterministic),
+        s"DML: the predicate must be deterministic, got $pred")
+      out
+    }
+
+  /** Target rows with at least one `source` match on `cond`. */
+  private def matching(
+      source: DataFrame, cond: org.apache.spark.sql.Column,
+      targetAlias: String, sourceAlias: String): Removal =
+    (rows, keep) => rows.alias(targetAlias).join(source.alias(sourceAlias),
+      cond, if (keep) "left_anti" else "left_semi")
+
+  private val everything: Removal =
+    (rows, keep) => if (keep) rows.limit(0) else rows
+
+  /** Partition column of the one job that writes a commit's sidecars. */
+  private val Side = "__graft_side"
+
+  /** Whether `version`'s data directory lies in `dir` itself — false for
+    * a shallow clone's reference into its source. */
+  private def ownsData(dir: String, version: String): Boolean = {
+    val p = java.nio.file.Paths.get(versionPath(dir, version))
+      .toAbsolutePath.normalize
+    p.getParent == java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+  }
+
+  /** THE CHANGE COMMIT — every DML statement is a caller. Against the
+    * committed version `cur` it publishes `next` as:
+    *  - `next_ref`: `cur`'s data directory, reused untouched;
+    *  - `next_dv`: `cur`'s vector plus the `removed` rows of the data
+    *    side (full rows, multiplicity kept, so [[history]]'s footer
+    *    arithmetic stays exact and a null-safe anti-join removes exactly
+    *    the selected tuples — duplicates of a removed tuple select
+    *    identically);
+    *  - `next_append`: `cur`'s append minus its `removed` rows, plus the
+    *    `added` rows (computed from the logical table, each column cast
+    *    to the base schema — a drifted type would poison later unions).
+    * One Spark job writes both sidecars (split by a partition column), so
+    * the statement's selections all run in one query and share one
+    * `current_timestamp()`; an empty sidecar is not written, and a read
+    * without a vector plans no anti-join. The vector never addresses
+    * append rows, so an added image equal to a removed pre-image (the
+    * identity assignment) survives its own commit. Sidecars and ref land
+    * BEFORE the pointer flips, so a reader sees the old or the new
+    * version complete. Each version is self-describing — one data
+    * directory plus at most one sidecar of each kind, never a chain to
+    * replay.
+    *
+    * With `fold` — and always when `cur`'s data belongs to another store
+    * (a shallow clone's first change) — the composition is published as
+    * the PLAIN version `next` instead: auto-compaction's output, written
+    * by one job, so the store owns the data its current version reads. */
+  private def commitChange(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      change: Change,
+      fold: Boolean = false): DataFrame = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val cur = currentVersion(dir)
+    val next = nextVersion(cur)
+    val (dataLogical, curAppend) = versionParts(spark, dir, cur)
+    require(!dataLogical.columns.contains(Side),
+      s"DML: reserved column $Side present in the table")
+    val fields = dataLogical.schema.fields.toIndexedSeq
+    val adds = change.added(
+        curAppend.fold(dataLogical)(dataLogical.unionByName(_)))
+      .map(a => a.select(
+        fields.map(f => a(f.name).cast(f.dataType).as(f.name)): _*))
+    val append = curAppend.map(ap => change.removed.fold(ap)(_(ap, true)))
+      .toSeq ++ adds
+    if (fold || !ownsData(dir, cur))
+      return snapshot((change.removed.fold(dataLogical)(_(dataLogical, true))
+        +: append).reduce(_.unionByName(_)), dir, next)
+    val curDv = Paths.get(dir, s"${cur}_dv")
+    val vector = Some(curDv).filter(Files.exists(_))
+      .map(p => Tables.openParquet(spark, p.toString)).toSeq ++
+      change.removed.map(_(dataLogical, false))
+    val stage = s"$dir/.${next}_stage"
+    (vector.map(_.withColumn(Side, lit("dv"))) ++
+      append.map(_.withColumn(Side, lit("append"))))
+      .reduceOption(_.unionByName(_))
+      .foreach(_.write.mode(SaveMode.Overwrite).partitionBy(Side)
+        .parquet(stage))
+    // an absent sidecar is DELETED, not skipped: under dir reuse a
+    // previous incarnation's file would otherwise apply to this commit
+    // (and its plain `next` directory would shadow nothing but waste)
+    Layouts.deleteDir(spark, s"$dir/$next")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Seq("dv", "append").foreach { side =>
+      val target = new org.apache.hadoop.fs.Path(s"$dir/${next}_$side")
+      val part = new org.apache.hadoop.fs.Path(s"$stage/$Side=$side")
+      if (fs.exists(target)) fs.delete(target, true)
+      if (fs.exists(part)) fs.rename(part, target)
+    }
+    Layouts.deleteDir(spark, stage)
+    val tmp = Paths.get(dir, s".${next}_ref.tmp.${Thread.currentThread.getId}")
+    Files.writeString(tmp, versionPath(dir, cur))
+    Files.move(tmp, Paths.get(dir, s"${next}_ref"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commit(dir, next)
+    maybeAutoCompact(spark, dir)
+      .getOrElse(readVersion(spark, dir, next))
+  }
+
+  /** The external-base form of a statement: publish `base` as v0, then
+    * commit `change` as v1, folded into a plain version — the store is
+    * made for this one statement, and its caller reads `v1` as a table. */
+  private def oneShot(base: DataFrame, dir: String, change: Change)
+      : DataFrame = {
+    publish(base, dir)
+    commitChange(base.sparkSession, dir, change, fold = true)
+  }
+
+  /** Project `rows` onto `fields`: each field takes its `byName` value,
+    * else typed NULL (the cast happens in [[commitChange]]). */
+  private def aligned(
+      rows: DataFrame,
+      fields: Seq[org.apache.spark.sql.types.StructField],
+      byName: Map[String, org.apache.spark.sql.Column]): DataFrame =
+    rows.select(fields.map { f =>
+      byName.getOrElse(f.name, lit(null).cast(f.dataType)).as(f.name)
+    }: _*)
+
+  /** Matched target rows projected through `assignments` — one image per
+    * (target, source) match. */
+  private def images(
+      target: DataFrame, source: DataFrame,
+      cond: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      targetAlias: String, sourceAlias: String): DataFrame =
+    target.alias(targetAlias)
+      .join(source.alias(sourceAlias), cond, "inner")
+      .select(target.columns.toIndexedSeq.map { c =>
+        assignments.getOrElse(c, col(s"$targetAlias.$c")).as(c)
+      }: _*)
+
+  /** INSERT INTO t [(cols)] VALUES (...) / SELECT …: publish `base` as v0,
+    * then commit the rows as v1 ([[oneShot]]; [[insertLatest]] is the
+    * chained form).
     *
     * `rows` may carry a SUBSET of the base columns — the explicit-column-
     * list form the reference plans (`tmp/crud.txt:186-188`); omitted
     * columns fill from `defaults` (e.g. the recorded `graft.default.*`
     * metadata) or typed NULL. Every inserted column is CAST to the base
-    * schema's type: mixing parquet files with a drifted type (INT vs
-    * BIGINT) would poison the directory — later reads fail or silently
-    * pick a footer depending on which file Spark samples. */
+    * schema's type. */
   def insertValues(
       base: DataFrame,
       rows: DataFrame,
       dir: String,
       defaults: Map[String, org.apache.spark.sql.Column] = Map.empty)
-      : DataFrame = {
-    val v0 = snapshot(base, dir, "v0")
-    val have = rows.columns.toSet
-    val unknown = have -- v0.columns
-    require(unknown.isEmpty,
-      s"INSERT columns not in target table: ${unknown.mkString(", ")}")
-    val aligned = rows.select(v0.schema.fields.toIndexedSeq.map { f =>
-      val c =
-        if (have(f.name)) col(f.name)
-        else defaults.getOrElse(f.name, lit(null))
-      c.cast(f.dataType).as(f.name)
-    }: _*)
-    snapshot(v0.unionByName(aligned), dir, "v1")
-  }
+      : DataFrame =
+    oneShot(base, dir, inserting(rows, defaults))
 
-  /** UPDATE t SET assignments WHERE pred — read v0, rewrite matching rows
-    * via CASE-style projection, publish v1 via the commit pointer. */
+  /** INSERT against the committed table: the rows land in the append
+    * sidecar; nothing is removed. */
+  def insertLatest(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      rows: DataFrame,
+      defaults: Map[String, org.apache.spark.sql.Column] = Map.empty)
+      : DataFrame =
+    commitChange(spark, dir, inserting(rows, defaults))
+
+  private def inserting(
+      rows: DataFrame,
+      defaults: Map[String, org.apache.spark.sql.Column]): Change =
+    Change(None, { logical =>
+      val unknown = rows.columns.toSet -- logical.columns
+      require(unknown.isEmpty,
+        s"INSERT columns not in target table: ${unknown.mkString(", ")}")
+      Seq(aligned(rows, logical.schema.fields.toIndexedSeq,
+        defaults ++ rows.columns.map(c => c -> col(c))))
+    })
+
+  /** UPDATE t SET assignments WHERE pred: publish `base` as v0, then
+    * commit the update as v1 ([[oneShot]]; [[updateLatest]] is the
+    * chained form). */
   def update(
       base: DataFrame,
       dir: String,
       pred: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): DataFrame = {
-    val v0 = snapshot(base, dir, "v0")
-    val updated = v0.select(v0.columns.toIndexedSeq.map { c =>
-      assignments.get(c) match {
-        case Some(newVal) => when(pred, newVal).otherwise(col(c)).as(c)
-        case None         => col(c)
-      }
-    }: _*)
-    snapshot(updated, dir, "v1")
-  }
+      assignments: Map[String, org.apache.spark.sql.Column]): DataFrame =
+    oneShot(base, dir, updating(pred, assignments))
+
+  /** UPDATE against the committed table: the matching rows are removed
+    * and their images (projected through `assignments`) appended. A NULL
+    * predicate leaves the row unchanged. */
+  def updateLatest(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      pred: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column]): DataFrame =
+    commitChange(spark, dir, updating(pred, assignments))
+
+  private def updating(
+      pred: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column]): Change =
+    Change(Some(where(pred)), logical =>
+      Seq(where(pred)(logical, false).select(logical.columns.toIndexedSeq
+        .map(c => assignments.getOrElse(c, col(c)).as(c)): _*)))
 
   /** UPDATE t SET assignments FROM s WHERE cond — the join-form update the
     * reference plans via its optional FROM subplan (`tmp/crud.txt:223-279`).
     * The target is aliased `t`, the source `s`; `cond` and assignment
     * values reference both (`col("t.x")`, `col("s.y")`). Rows with a
     * match get the assignments; all others pass through unchanged.
+    * Publishes `base` as v0, then commits the update as v1
+    * ([[oneShot]]; [[updateFromLatest]] is the chained form).
     *
     * The source must be unique per matched target row (standard
     * UPDATE…FROM contract — Postgres leaves multi-match unspecified;
-    * here a duplicate match would duplicate the target row).
-    *
-    * Scale: one left join (broadcast when the source is small, shuffled
-    * otherwise) + full rewrite to v1 — the same cost envelope as a
-    * lakehouse MERGE without file-level pruning. */
+    * here a duplicate match would duplicate the target row). */
   def updateFrom(
       base: DataFrame,
       dir: String,
@@ -180,46 +369,36 @@ object Dml {
       cond: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       targetAlias: String = "t",
-      sourceAlias: String = "s"): DataFrame = {
-    val v0 = snapshot(base, dir, "v0")
-    // Collision-proof match marker: an unqualified `_matched` would be
-    // ambiguous against a target table that already has that column.
-    val marker = "__graft_matched"
-    require(!v0.columns.contains(marker) && !source.columns.contains(marker),
-      s"updateFrom: reserved marker column $marker present in input")
-    val marked = v0.alias(targetAlias).join(
-      source.withColumn(marker, lit(true)).alias(sourceAlias), cond, "left")
-    val updated = marked.select(v0.columns.toIndexedSeq.map { c =>
-      assignments.get(c) match {
-        case Some(newVal) =>
-          when(coalesce(col(marker), lit(false)), newVal)
-            .otherwise(col(s"$targetAlias.$c")).as(c)
-        case None => col(s"$targetAlias.$c").as(c)
-      }
-    }: _*)
-    snapshot(updated, dir, "v1")
-  }
+      sourceAlias: String = "s"): DataFrame =
+    oneShot(base, dir,
+      updatingFrom(source, cond, assignments, targetAlias, sourceAlias))
 
-  /** MERGE INTO — the lakehouse upsert statement composed from the two
-    * primitives above: matched target rows take the UPDATE assignments
-    * ([[updateFrom]]'s marked-join shape), source rows with NO target
-    * match append as inserts (each value cast to the target column's
-    * type; omitted columns fill with typed NULL, [[insertValues]]'s
-    * alignment rule), and the result publishes as one committed
-    * copy-on-write version. Standard MERGE precondition — the source is
-    * unique on the match keys — is ENFORCED when `checkCardinality` is
-    * on (default): a target row matched by more than one source row
-    * raises the ANSI cardinality violation instead of silently
-    * duplicating through the join. The check is one extra pass of the
-    * same keys-co-located join (a limit-1 probe for any multiplicity>1
-    * group); at 100 TB, callers with upstream-guaranteed uniqueness can
-    * disable it.
-    *
-    * Scale: one join each for the matched and unmatched sides — both on
-    * the merge keys, so at 100 TB they co-locate under one shuffle (or
-    * broadcast when the delta is small, the common upsert case); the
-    * union is plan-level only. A real deployment rewrites only touched
-    * partitions/buckets under the same commit protocol. */
+  /** UPDATE … FROM against the committed table: the matched rows are
+    * removed (a semi-join on `cond`) and their inner-join images
+    * appended. */
+  def updateFromLatest(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      source: DataFrame,
+      cond: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      targetAlias: String = "t",
+      sourceAlias: String = "s"): DataFrame =
+    commitChange(spark, dir,
+      updatingFrom(source, cond, assignments, targetAlias, sourceAlias))
+
+  private def updatingFrom(
+      source: DataFrame,
+      cond: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      targetAlias: String, sourceAlias: String): Change =
+    Change(Some(matching(source, cond, targetAlias, sourceAlias)), logical =>
+      Seq(images(logical, source, cond, assignments,
+        targetAlias, sourceAlias)))
+
+  /** MERGE INTO — the lakehouse upsert: publish `base` as v0, then commit
+    * the merge as v1 ([[oneShot]]; [[mergeOnRead]] is the chained form
+    * and documents the semantics). */
   def merge(
       base: DataFrame,
       dir: String,
@@ -231,69 +410,27 @@ object Dml {
       targetAlias: String = "t",
       sourceAlias: String = "s",
       checkCardinality: Boolean = true,
-      notMatchedBySourceDelete: Boolean = false): DataFrame = {
-    val v0 = snapshot(base, dir, "v0")
-    val marker = "__graft_matched"
-    val rowid = "__graft_rowid"
-    require(!v0.columns.contains(marker) && !source.columns.contains(marker),
-      s"merge: reserved marker column $marker present in input")
-    require(!v0.columns.contains(rowid) && !source.columns.contains(rowid),
-      s"merge: reserved rowid column $rowid present in input")
-    if (checkCardinality) {
-      // ANSI MERGE cardinality: no target row may match >1 source rows.
-      // Tag each target row, re-run the matched side of the join, and
-      // probe for any multiplicity > 1 — limit-1 short-circuits.
-      val multi = v0.withColumn(rowid, monotonically_increasing_id())
-        .alias(targetAlias)
-        .join(source.alias(sourceAlias), cond, "inner")
-        .groupBy(col(rowid)).count()
-        .filter(col("count") > 1)
-      require(multi.isEmpty,
-        "merge: MERGE cardinality violation — a target row matches " +
-          "more than one source row (source must be unique on the " +
-          "match keys); deduplicate the source or pre-aggregate it")
-    }
-    val marked = v0.alias(targetAlias).join(
-      source.withColumn(marker, lit(true)).alias(sourceAlias), cond, "left")
-    val updatedAll = marked.select(v0.columns.toIndexedSeq.map { c =>
-      assignments.get(c) match {
-        case Some(newVal) =>
-          when(coalesce(col(marker), lit(false)), newVal)
-            .otherwise(col(s"$targetAlias.$c")).as(c)
-        case None => col(s"$targetAlias.$c").as(c)
-      }
-    } :+ coalesce(col(marker), lit(false)).as(marker): _*)
-    // WHEN NOT MATCHED BY SOURCE THEN DELETE — the table-SYNC clause:
-    // target rows no source row matched drop out, so target converges
-    // to (updated ∩ source) ∪ inserts. Default keeps them (ANSI MERGE
-    // without the clause).
-    val updated = (if (notMatchedBySourceDelete)
-      updatedAll.filter(col(marker)) else updatedAll).drop(marker)
-    val merged = insertVals match {
-      case Some(vals) =>
-        val cols = insertCols.getOrElse(v0.columns.toSeq.take(vals.length))
-        require(cols.length == vals.length,
-          s"merge: INSERT column list (${cols.length}) and VALUES " +
-            s"(${vals.length}) differ in arity")
-        val byName = cols.zip(vals).toMap
-        val unmatched = source.alias(sourceAlias)
-          .join(v0.alias(targetAlias), cond, "left_anti")
-        val inserts = unmatched.select(v0.schema.fields.toIndexedSeq.map {
-          f =>
-            byName.get(f.name).map(_.cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-        }: _*)
-        updated.unionByName(inserts)
-      case None => updated
-    }
-    snapshot(merged, dir, "v1")
-  }
+      notMatchedBySourceDelete: Boolean = false): DataFrame =
+    oneShot(base, dir, merging(source, cond, assignments, insertCols,
+      insertVals, targetAlias, sourceAlias, checkCardinality,
+      notMatchedBySourceDelete))
 
-  /** [[mergeOnRead]] against an external base: snapshot `base` as v0,
-    * then commit the merge as v1's sidecar pair (the [[deleteWithDv]]
-    * convenience shape, for MERGE). */
-  def mergeWithDv(
-      base: DataFrame,
+  /** MERGE against the committed table — the upsert as an O(changes)
+    * commit (Delta deletion-vector MERGE / Iceberg merge-on-read):
+    * matched target rows are removed and their images (the UPDATE
+    * assignments) appended; source rows with NO target match append as
+    * inserts (each value cast to the target column's type, omitted
+    * columns typed NULL — [[insertLatest]]'s alignment rule). WHEN NOT
+    * MATCHED BY SOURCE THEN DELETE (`notMatchedBySourceDelete`, the
+    * table-SYNC clause) removes every target row instead, so the table
+    * converges to images ∪ inserts; auto-compaction folds that commit
+    * like any other large change. The standard MERGE precondition — the
+    * source is unique on the match keys — is ENFORCED when
+    * `checkCardinality` is on (default): a target row matched by more
+    * than one source row raises the ANSI cardinality violation instead
+    * of silently duplicating through the join. */
+  def mergeOnRead(
+      spark: org.apache.spark.sql.SparkSession,
       dir: String,
       source: DataFrame,
       cond: org.apache.spark.sql.Column,
@@ -301,115 +438,94 @@ object Dml {
       insertCols: Option[Seq[String]],
       insertVals: Option[Seq[org.apache.spark.sql.Column]],
       targetAlias: String = "t",
-      sourceAlias: String = "s"): DataFrame = {
-    snapshot(base, dir, "v0")
-    mergeOnRead(base.sparkSession, dir, source, cond, assignments,
-      insertCols, insertVals, targetAlias, sourceAlias)
+      sourceAlias: String = "s",
+      checkCardinality: Boolean = true,
+      notMatchedBySourceDelete: Boolean = false): DataFrame =
+    commitChange(spark, dir, merging(source, cond, assignments, insertCols,
+      insertVals, targetAlias, sourceAlias, checkCardinality,
+      notMatchedBySourceDelete))
+
+  private def merging(
+      source: DataFrame,
+      cond: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      insertCols: Option[Seq[String]],
+      insertVals: Option[Seq[org.apache.spark.sql.Column]],
+      targetAlias: String,
+      sourceAlias: String,
+      checkCardinality: Boolean,
+      notMatchedBySourceDelete: Boolean): Change = {
+    val removed =
+      if (notMatchedBySourceDelete) everything
+      else matching(source, cond, targetAlias, sourceAlias)
+    Change(Some(removed), { logical =>
+      if (checkCardinality) {
+        // ANSI MERGE cardinality: tag each target row, re-run the matched
+        // side of the join and probe for any multiplicity > 1 — limit-1
+        // short-circuits
+        val rowid = "__graft_rowid"
+        require(!logical.columns.contains(rowid) &&
+          !source.columns.contains(rowid),
+          s"merge: reserved rowid column $rowid present in input")
+        val multi = logical.withColumn(rowid, monotonically_increasing_id())
+          .alias(targetAlias)
+          .join(source.alias(sourceAlias), cond, "inner")
+          .groupBy(col(rowid)).count()
+          .filter(col("count") > 1)
+        require(multi.isEmpty,
+          "merge: MERGE cardinality violation — a target row matches " +
+            "more than one source row (source must be unique on the " +
+            "match keys); deduplicate the source or pre-aggregate it")
+      }
+      val inserts = insertVals.map { vals =>
+        val cols = insertCols.getOrElse(logical.columns.toSeq.take(vals.length))
+        require(cols.length == vals.length,
+          s"merge: INSERT column list (${cols.length}) and VALUES " +
+            s"(${vals.length}) differ in arity")
+        aligned(source.alias(sourceAlias)
+          .join(logical.alias(targetAlias), cond, "left_anti"),
+          logical.schema.fields.toIndexedSeq, cols.zip(vals).toMap)
+      }
+      images(logical, source, cond, assignments, targetAlias, sourceAlias) +:
+        inserts.toSeq
+    })
   }
 
-  /** DELETE FROM t WHERE pred — keep the complement, publish v1 via the
-    * commit pointer. */
+  /** DELETE FROM t WHERE pred: publish `base` as v0, then commit the
+    * delete as v1 ([[oneShot]]; [[deleteLatest]] is the chained form). */
   def delete(
       base: DataFrame,
       dir: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    val v0 = snapshot(base, dir, "v0")
-    val kept = v0.filter(!coalesce(pred, lit(false)))
-    snapshot(kept, dir, "v1")
-  }
+      pred: org.apache.spark.sql.Column): DataFrame =
+    oneShot(base, dir, deleting(pred))
 
-  /** DELETE … WHERE pred committed as a DELETION VECTOR (the Delta
-    * deletion-vectors / Iceberg position-delete kernel). [[delete]]
-    * rewrites the surviving complement — O(table) write amplification
-    * for a 0.01% delete, the dominant DML cost at 100 TB. Here the new
-    * version REUSES the current version's data directory untouched
-    * (the same `_ref` indirection [[shallowClone]] uses) and adds a
-    * `<version>_dv` parquet sidecar holding the DELETED ROWS, applied
-    * as a null-safe broadcast anti-join at read time ([[readVersion]]).
-    * Write cost is O(deleted rows); the committed data files are
-    * byte-identical before and after (DmlSpec asserts the file list).
-    *
-    * Semantics are EXACT with no primary-key assumption: the sidecar
-    * stores FULL ROWS, and any duplicate of a deleted tuple evaluates
-    * the predicate identically — so a full-tuple anti-join removes
-    * precisely the predicate's rows. Multiplicity is preserved in the
-    * sidecar (no distinct), so [[history]]'s footer arithmetic
-    * (data rows − sidecar rows) stays exact under duplicates too.
-    *
-    * Read overhead is one small broadcast anti-join per scan until
-    * [[optimize]] (or any copy-on-write mutation — they all read the
-    * LOGICAL table) folds the vector back into plain data files: the
-    * same compaction escape hatch Delta applies when a vector grows
-    * past its read-overhead budget. Like [[delete]], this snapshots an
-    * external base as v0 then publishes the DV commit as v1; the
-    * chained in-place form is [[dvDeleteLatest]]. */
-  def deleteWithDv(
-      base: DataFrame,
-      dir: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    snapshot(base, dir, "v0")
-    dvDeleteLatest(base.sparkSession, dir, pred)
-  }
-
-  /** One deletion-vector DELETE commit against the committed table
-    * (the chained form of [[deleteWithDv]], mirroring [[deleteLatest]]).
-    * Successive DV commits ACCUMULATE: the new sidecar unions the
-    * current version's vector with the newly deleted rows, so every
-    * version stays self-describing — exactly one data directory plus
-    * at most one sidecar, never a chain of vectors to replay. */
-  def dvDeleteLatest(
+  /** DELETE against the committed table, as a DELETION VECTOR (the Delta
+    * deletion-vectors / Iceberg position-delete kernel): base-data rows
+    * the predicate selects join the vector, applied as a null-safe
+    * broadcast anti-join at read ([[readVersion]]); append-origin rows
+    * drop by rewriting the O(changes) append copy. Write cost is
+    * O(deleted rows); the committed data files are byte-identical before
+    * and after. A NULL predicate does not delete the row. */
+  def deleteLatest(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val cur = currentVersion(dir)
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    // deletions split by ORIGIN: base-data rows delete through the
-    // vector (anti-joined at read, so footer arithmetic stays exact —
-    // one sidecar row per deleted base row); append-sidecar rows (a
-    // prior mergeOnRead's delta) delete by REWRITING the O(changes)
-    // append copy — the vector never addresses append rows, which is
-    // what lets readVersion apply it to the data directory alone.
-    val (dataLogical, curAppend) = versionParts(spark, dir, cur)
-    val curDv = Paths.get(dir, s"${cur}_dv")
-    val matchedData = dataLogical.filter(coalesce(pred, lit(false)))
-    val vector =
-      if (Files.exists(curDv))
-        Tables.openParquet(spark, curDv.toString).unionByName(matchedData)
-      else matchedData
-    // sidecar + data ref land BEFORE the pointer flips (commit is last),
-    // so a concurrent reader resolves either the old or the new version
-    // complete — the store's atomicity contract, unchanged
-    vector.write.mode(SaveMode.Overwrite).parquet(s"$dir/${next}_dv")
-    curAppend match {
-      case Some(ap) =>
-        ap.filter(!coalesce(pred, lit(false)))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/${next}_append")
-      case None =>
-        // dir reuse: a previous incarnation's ${next}_append must not
-        // survive into this commit (readVersion would union orphans)
-        Layouts.deleteDir(spark, s"$dir/${next}_append")
-    }
-    val tmp = Paths.get(dir, s".${next}_ref.tmp.${Thread.currentThread.getId}")
-    Files.writeString(tmp, versionPath(dir, cur))
-    Files.move(tmp, Paths.get(dir, s"${next}_ref"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    commit(dir, next)
-    maybeAutoCompact(spark, dir)
-      .getOrElse(readVersion(spark, dir, next))
-  }
+      pred: org.apache.spark.sql.Column): DataFrame =
+    commitChange(spark, dir, deleting(pred))
+
+  private def deleting(pred: org.apache.spark.sql.Column): Change =
+    Change(Some(where(pred)), _ => Nil)
 
   /** SIDECAR AUTO-COMPACTION trigger (the Delta auto-compaction
-    * analog): after a merge-on-read / deletion-vector commit, when the
-    * committed version's accumulated sidecar rows (vector + append)
-    * exceed `spark.graft.dv.autoCompactRatio` (default 0.5) of its
+    * analog): after a change commit, when the committed version's
+    * accumulated sidecar rows (vector + append) exceed
+    * `spark.graft.dv.autoCompactRatio` (default 0.5) of its
     * data-directory rows AND at least
     * `spark.graft.dv.autoCompactMinRows` (default 1000) sidecar rows
     * exist, publish ONE further PLAIN version folding the composition
     * back into data files. Without a trigger the vector and the
     * per-commit-rewritten append copy grow without bound until a
     * manual [[optimize]] — every read paying a bigger anti-join +
-    * union, every MoR commit rewriting a bigger append copy. The
+    * union, every commit rewriting a bigger append copy. The
     * check itself is parquet-FOOTER arithmetic (metadata reads, no
     * data); the fold costs one O(table) write exactly when the
     * amortized read/write tax already exceeds it. The floor keeps
@@ -428,8 +544,7 @@ object Dml {
     if (sidecar < minRows) return None
     val dataRows = footerRowCount(spark, versionPath(dir, cur))
     if (dataRows == 0 || sidecar.toDouble / dataRows <= ratio) return None
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    Some(snapshot(readVersion(spark, dir, cur), dir, next))
+    Some(snapshot(readVersion(spark, dir, cur), dir, nextVersion(cur)))
   }
 
   /** Footer row count of a version's sidecar (`_dv` / `_append`), 0
@@ -444,117 +559,10 @@ object Dml {
     else 0L
   }
 
-  /** MERGE-ON-READ MERGE — the upsert as an O(changes) commit (Delta
-    * deletion-vector MERGE / Iceberg merge-on-read): the new version
-    * REUSES the current data directory untouched (the `_ref`
-    * indirection), records the matched rows' PRE-IMAGES in the
-    * `_dv` sidecar, and lands updated images + inserts in an
-    * `_append` sidecar; [[readVersion]] composes them as
-    * (data − vector) ∪ append. At 100 TB this is the difference
-    * between rewriting the table and writing O(changed rows) for a
-    * 0.01% upsert — the copy-on-write [[merge]] stays the right call
-    * when the match fraction is large (and [[optimize]] folds the
-    * sidecars back to plain files either way).
-    *
-    * Semantics are identical to [[merge]]'s two-clause form (WHEN
-    * MATCHED UPDATE / WHEN NOT MATCHED INSERT), including the ANSI
-    * cardinality check; the m27 gate holds this commit strategy to
-    * m11's relational MERGE oracle. Origin split: the vector gets the
-    * matched BASE-DATA pre-images only (multiplicity-preserving, so
-    * history's footer arithmetic stays exact); matched rows living in
-    * the CURRENT version's append sidecar are dropped by rewriting
-    * that O(changes) copy instead — the vector never addresses append
-    * rows, so an updated image equal to its pre-image (the identity
-    * assignment) survives its own commit. Every written column CASTS
-    * to the base schema (a drifted type in the append dir would
-    * poison later unions). */
-  def mergeOnRead(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      source: DataFrame,
-      cond: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      insertCols: Option[Seq[String]],
-      insertVals: Option[Seq[org.apache.spark.sql.Column]],
-      targetAlias: String = "t",
-      sourceAlias: String = "s",
-      checkCardinality: Boolean = true): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val cur = currentVersion(dir)
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    val rowid = "__graft_rowid"
-    val (dataLogical, curAppend) = versionParts(spark, dir, cur)
-    val curDvP = Paths.get(dir, s"${cur}_dv")
-    val logical = curAppend.fold(dataLogical)(dataLogical.unionByName(_))
-    require(!logical.columns.contains(rowid) &&
-      !source.columns.contains(rowid),
-      s"mergeOnRead: reserved rowid column $rowid present in input")
-    if (checkCardinality) {
-      val multi = logical.withColumn(rowid, monotonically_increasing_id())
-        .alias(targetAlias)
-        .join(source.alias(sourceAlias), cond, "inner")
-        .groupBy(col(rowid)).count()
-        .filter(col("count") > 1)
-      require(multi.isEmpty,
-        "mergeOnRead: MERGE cardinality violation — a target row " +
-          "matches more than one source row (source must be unique on " +
-          "the match keys); deduplicate the source or pre-aggregate it")
-    }
-    val fields = dataLogical.schema.fields.toIndexedSeq
-    // updated images: one per matched logical row (cardinality-checked)
-    val updated = logical.alias(targetAlias)
-      .join(source.alias(sourceAlias), cond, "inner")
-      .select(fields.map { f =>
-        assignments.getOrElse(f.name, col(s"$targetAlias.${f.name}"))
-          .cast(f.dataType).as(f.name)
-      }: _*)
-    val inserts = insertVals match {
-      case Some(vals) =>
-        val cols = insertCols.getOrElse(fields.map(_.name).take(vals.length))
-        require(cols.length == vals.length,
-          s"mergeOnRead: INSERT column list (${cols.length}) and VALUES " +
-            s"(${vals.length}) differ in arity")
-        val byName = cols.zip(vals).toMap
-        val unmatched = source.alias(sourceAlias)
-          .join(logical.alias(targetAlias), cond, "left_anti")
-        Some(unmatched.select(fields.map { f =>
-          byName.get(f.name).map(_.cast(f.dataType))
-            .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-        }: _*))
-      case None => None
-    }
-    // origin split: base-data pre-images -> vector; append pre-images
-    // -> dropped from the rewritten O(changes) append copy
-    val matchedData = dataLogical.alias(targetAlias)
-      .join(source.alias(sourceAlias), cond, "left_semi")
-    val appendSurvivors = curAppend.map(_.alias(targetAlias)
-      .join(source.alias(sourceAlias), cond, "left_anti"))
-    val nextAppend = (appendSurvivors.toSeq ++ Seq(updated) ++ inserts)
-      .reduce(_.unionByName(_))
-    // sidecars + ref land before the pointer flips (atomicity contract)
-    nextAppend.write.mode(SaveMode.Overwrite).parquet(s"$dir/${next}_append")
-    // unconditional: the old isEmpty probe re-ran the O(table)
-    // semi-join just to skip an empty sidecar that reads back fine
-    // (dvDeleteLatest precedent) — and skipping the write left a
-    // PREVIOUS incarnation's ${next}_dv orphaned under dir reuse
-    val vector =
-      if (Files.exists(curDvP))
-        Tables.openParquet(spark, curDvP.toString).unionByName(matchedData)
-      else matchedData
-    vector.write.mode(SaveMode.Overwrite).parquet(s"$dir/${next}_dv")
-    val tmp = Paths.get(dir, s".${next}_ref.tmp.${Thread.currentThread.getId}")
-    Files.writeString(tmp, versionPath(dir, cur))
-    Files.move(tmp, Paths.get(dir, s"${next}_ref"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    commit(dir, next)
-    maybeAutoCompact(spark, dir)
-      .getOrElse(readVersion(spark, dir, next))
-  }
-
   // ---- time travel -------------------------------------------------------
-  // Every committed version directory is IMMUTABLE once the pointer moves
-  // past it (the copy-on-write discipline above never rewrites a published
-  // directory), so historical reads are free: resolve a version NAME
+  // Every committed version is IMMUTABLE once the pointer moves past it
+  // (a change commit only ever writes the NEXT version's sidecars and
+  // ref), so historical reads are free: resolve a version NAME
   // instead of `_latest`. This is lakehouse time travel reduced to its
   // kernel — VERSION AS OF — on the same single-table commit protocol.
 
@@ -564,10 +572,10 @@ object Dml {
       .readString(java.nio.file.Paths.get(dir, "_latest")).trim
 
   /** Resolve a version name to its DATA directory: normally
-    * `<dir>/<version>`, but a `<version>_ref` file (written by
-    * [[shallowClone]]) redirects to another table's committed version
-    * directory — the metadata-only indirection that makes a clone
-    * zero-copy. */
+    * `<dir>/<version>`, but a `<version>_ref` file (written by every
+    * change commit and by [[shallowClone]]) redirects to an earlier
+    * version's data directory — the metadata-only indirection that
+    * makes a change commit and a clone zero-copy. */
   private[graft] def versionPath(dir: String, version: String): String = {
     val ref = java.nio.file.Paths.get(dir, s"${version}_ref")
     if (java.nio.file.Files.exists(ref))
@@ -577,13 +585,13 @@ object Dml {
 
   /** TIME TRAVEL: read a specific committed version of the table at
     * `dir` (`VERSION AS OF` on the commit-pointer store). A version
-    * carrying a `<version>_dv` sidecar ([[deleteWithDv]]) reads as its
+    * carrying a `<version>_dv` sidecar ([[commitChange]]) reads as its
     * data directory MINUS the vector: a null-safe anti-join on every
     * column — plain equi-join keys would never match a deleted row
     * carrying a NULL field, silently resurrecting it. The vector is
     * broadcast (it is small by construction — a vector past the
     * broadcast budget is the signal to [[optimize]] it away). A
-    * `<version>_append` sidecar ([[mergeOnRead]]) unions AFTER the
+    * `<version>_append` sidecar unions AFTER the
     * vector is applied: the vector addresses BASE-DATA rows only, so an
     * updated image that happens to equal its pre-image (the identity
     * assignment) is never re-deleted by its own commit. */
@@ -597,7 +605,7 @@ object Dml {
   /** OPTIMIZE — compact the committed version's many small files into
     * `targetFiles` by publishing the SAME ROWS as a new version (the
     * lakehouse small-file compaction statement, on the store's
-    * copy-on-write + pointer protocol — the layout-level twin is
+    * snapshot + pointer protocol — the layout-level twin is
     * io08's [[Layouts]] compaction). Content identity is the entire
     * contract: the m23 gate hash-compares the post-OPTIMIZE table to
     * the logical state, and DmlSpec asserts the file count actually
@@ -609,9 +617,8 @@ object Dml {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       targetFiles: Int = 1): DataFrame = {
-    val cur = currentVersion(dir)
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    snapshot(readLatest(spark, dir).repartition(targetFiles), dir, next)
+    snapshot(readLatest(spark, dir).repartition(targetFiles), dir,
+      nextVersion(currentVersion(dir)))
   }
 
   /** TABLE HISTORY (DESCRIBE HISTORY reduced to the pointer-store
@@ -639,8 +646,8 @@ object Dml {
       .toSeq.distinct.sortBy(_.drop(1).toInt)
     // a sidecar-carrying version's logical count is data minus vector
     // plus append — exact because the vector preserves multiplicity
-    // (one sidecar row per deleted base row, see deleteWithDv /
-    // mergeOnRead's origin split) and the append dir holds real rows
+    // (one sidecar row per deleted base row, see commitChange's origin
+    // split) and the append dir holds real rows
     val counts = versions.map { v =>
       (v, footerRowCount(spark, versionPath(dir, v))
         - sidecarRows(spark, dir, v, "_dv")
@@ -678,11 +685,11 @@ object Dml {
     * plus its own commit pointer — two metadata writes regardless of
     * table size, which is the entire point at 100 TB (a deep copy is
     * a full second table's worth of IO and storage). The fork then
-    * diverges by plain copy-on-write: every mutation on the clone
-    * publishes REAL new version directories under the clone, and the
-    * source's own mutations publish new directories on its side —
-    * neither can touch the other's committed state because committed
-    * directories are never rewritten (the store's invariant).
+    * diverges: the clone's first change is folded into a plain version
+    * under the clone ([[commitChange]]), later ones commit sidecars over
+    * that data, and the source's own mutations publish new versions on
+    * its side — neither can touch the other's committed state because
+    * committed versions are never rewritten (the store's invariant).
     *
     * The real-lakehouse caveat carries over exactly: the clone holds
     * no lease on the source's files, so a [[vacuum]] on the SOURCE
@@ -705,11 +712,13 @@ object Dml {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     // a sidecar-carrying source version: copy the (small, O(changes))
     // vector and append dirs so the clone's v0 preserves the source's
-    // LOGICAL view — the data stays zero-copy, which is the contract
+    // LOGICAL view — the data stays zero-copy, which is the contract. A
+    // sidecar a previous clone left in a reused dstDir dies first.
     val hconf = spark.sessionState.newHadoopConf()
     Seq("_dv", "_append").foreach { suffix =>
       val side = new org.apache.hadoop.fs.Path(s"$srcDir/$srcV$suffix")
       val fs = side.getFileSystem(hconf)
+      Layouts.deleteDir(spark, s"$dstDir/v0$suffix")
       if (fs.exists(side))
         org.apache.hadoop.fs.FileUtil.copy(
           fs, side, fs,
@@ -718,20 +727,6 @@ object Dml {
     }
     commit(dstDir, "v0")
     readVersion(spark, dstDir, "v0")
-  }
-
-  /** DELETE applied to the COMMITTED table in place: reads `_latest`,
-    * publishes the NEXT version (v<n+1>), and leaves every earlier
-    * version readable — the history-preserving chained form of [[delete]]
-    * (which snapshots an external base as v0/v1). */
-  def deleteLatest(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      pred: org.apache.spark.sql.Column): DataFrame = {
-    val cur = currentVersion(dir)
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    snapshot(readLatest(spark, dir).filter(!coalesce(pred, lit(false))),
-      dir, next)
   }
 
   /** RESTORE — roll the committed table back to an earlier version by
@@ -751,16 +746,15 @@ object Dml {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       version: String): DataFrame = {
-    val cur = currentVersion(dir)
-    val next = "v" + (cur.stripPrefix("v").toInt + 1)
-    snapshot(readVersion(spark, dir, version), dir, next)
+    snapshot(readVersion(spark, dir, version), dir,
+      nextVersion(currentVersion(dir)))
   }
 
   /** CONSTRAINT-ENFORCING INSERT with QUARANTINE — the acting half of
     * the m08 contract: the registry records constraints and
     * `auditConstraints` reports violations after the fact; this
     * enforces them AT INGEST, splitting incoming rows into an accepted
-    * set (committed through [[insertValues]]' copy-on-write protocol)
+    * set (committed through [[insertValues]]' append commit)
     * and a reject relation tagged with the FIRST violated rule
     * (not-null → check → primary-key-dup, a deterministic order so a
     * multiply-bad row routes identically everywhere). PK dup detection
@@ -1053,9 +1047,9 @@ object DmlQueries {
              |t(constraint_name, n_violations)"""
         .stripMargin.replace('\n', ' '))),
 
-    // TIME TRAVEL (VERSION AS OF) — the property the copy-on-write +
+    // TIME TRAVEL (VERSION AS OF) — the property the immutable-version +
     // atomic-pointer protocol buys beyond crash atomicity: committed
-    // version directories are immutable, so EVERY historical state stays
+    // versions are never rewritten, so EVERY historical state stays
     // readable by name. The entry builds a three-version history in one
     // store (v0 = imported nation, v1 = after INSERT, v2 = after a
     // chained history-preserving DELETE) and emits all three versions
@@ -1088,7 +1082,7 @@ object DmlQueries {
     // SQL-STATEMENT DML — the reference's actual CRUD surface is SQL text
     // (`tmp/crud.txt:203-301`), not a typed API: UPDATE…WHERE and
     // DELETE…WHERE route through ExecutionContext's statement bridge to
-    // the same copy-on-write store m03/m04 exercise directly, with the
+    // the same versioned store m03/m04 exercise directly, with the
     // result re-registered as the session view so the follow-up SELECT
     // (also SQL) reads the mutated state — a three-statement SQL session
     // under one oracle. The entry mutates its own registered view name,
@@ -1117,7 +1111,7 @@ object DmlQueries {
     // MERGE INTO — the SQL-statement upsert (m10's missing sibling):
     // a source of 10 rows half-overlapping the nation keys updates the
     // 5 matched names and inserts the 5 unmatched rows, through
-    // Dml.merge's copy-on-write store; the follow-up SELECT reads the
+    // Dml.mergeOnRead's change commit; the follow-up SELECT reads the
     // re-registered session view. The oracle restates MERGE as its
     // relational definition: LEFT JOIN for the matched update, anti-join
     // for the inserts, UNION ALL.
@@ -1213,7 +1207,7 @@ object DmlQueries {
     // data directory exists — the "shallow" contract is asserted, not
     // assumed); then BOTH sides mutate independently (source deletes
     // keys < 5, clone deletes keys >= 20 except the marker) and the
-    // gate reads both final states — divergence-by-copy-on-write with
+    // gate reads both final states — divergence-by-change-commit with
     // neither side seeing the other's delete, stated arithmetically
     // by the oracle.
     Q("m21_shallow_clone",
@@ -1332,7 +1326,7 @@ object DmlQueries {
              |GROUP BY 1""".stripMargin.replace('\n', ' ')),
       bench = true),
 
-    // DELETE as a DELETION VECTOR — see [[Dml.deleteWithDv]]: the
+    // DELETE as a DELETION VECTOR — see [[Dml.deleteLatest]]: the
     // commit reuses v0's data directory untouched and adds an
     // O(deleted-rows) sidecar, applied as a broadcast anti-join at
     // read. The gate holds the LOGICAL result to m04's relational
@@ -1342,54 +1336,48 @@ object DmlQueries {
     // guard are DmlSpec's runtime evidence (file layout is not
     // oracle territory).
     Q("m25_deletion_vector",
-      (s, d) =>
-        Dml.deleteWithDv(
-          Tables.t(s, d, "orders"),
-          Dml.work("m25", d),
+      (s, d) => {
+        val dir = Dml.work("m25", d)
+        Dml.publish(Tables.t(s, d, "orders"), dir)
+        Dml.deleteLatest(s, dir,
           col("o_orderpriority") === "1-URGENT" &&
-            col("o_totalprice") < 50000.0),
+            col("o_totalprice") < 50000.0)
+      },
       Some("""SELECT * FROM orders WHERE NOT coalesce(
              |o_orderpriority = '1-URGENT' AND o_totalprice < 50000.0,
              |FALSE)""".stripMargin.replace('\n', ' '))),
 
-    // The SQL surface of the deletion vector: `spark.graft.delete.mode`
-    // = "dv" routes ExecutionContext's DELETE statement through
-    // [[Dml.deleteWithDv]] instead of the complement rewrite. Shares
-    // m04's relational contract — one oracle, two commit strategies,
-    // the mode switch proven semantically invisible under the hash
-    // gate (the store-shape evidence is ExecutionContextSpec's). The
-    // entry mutates its OWN registered view name (m10's discipline),
-    // never the shared catalog tables, and restores the session conf.
+    // The SQL surface of the deletion vector: ExecutionContext's DELETE
+    // statement commits through [[Dml.deleteLatest]]. Shares m04's
+    // relational contract — the API and SQL forms of one commit path
+    // under one oracle (the store-shape evidence is
+    // ExecutionContextSpec's). The entry mutates its OWN registered view
+    // name (m10's discipline), never the shared catalog tables.
     Q("m26_sql_dv_delete",
       (s, d) => {
         val ctx = new ExecutionContext(s)
         Tables.t(s, d, "customer")
           .createOrReplaceTempView("g_dv_customer")
-        val saved = s.conf.getOption("spark.graft.delete.mode")
-        s.conf.set("spark.graft.delete.mode", "dv")
-        try ctx.execute("DELETE FROM g_dv_customer WHERE c_acctbal < 0")
-        finally saved match {
-          case Some(v) => s.conf.set("spark.graft.delete.mode", v)
-          case None    => s.conf.unset("spark.graft.delete.mode")
-        }
+        ctx.execute("DELETE FROM g_dv_customer WHERE c_acctbal < 0")
       },
       Some("SELECT * FROM customer WHERE NOT coalesce(c_acctbal < 0, FALSE)")),
 
-    // MERGE as an O(changes) commit: the same upsert as m11, committed
-    // through the merge-on-read sidecar pair (data dir untouched via
-    // _ref; matched pre-images in _dv; updated images + inserts in
-    // _append) instead of m11's full-table rewrite. Shares m11's oracle
-    // VERBATIM — one relational contract, two commit strategies, the
-    // strategy switch proven semantically invisible under the hash
-    // gate; the store-shape evidence (zero-rewrite, sidecar sizes,
-    // history arithmetic, optimize fold) is DmlSpec's.
+    // MERGE as an O(changes) commit through the typed API: the same
+    // upsert as m11's SQL statement, committed as the sidecar pair (data
+    // dir untouched via _ref; matched pre-images in _dv; updated images
+    // + inserts in _append). Shares m11's oracle VERBATIM — one
+    // relational contract for the API and SQL forms; the store-shape
+    // evidence (zero-rewrite, sidecar sizes, history arithmetic,
+    // optimize fold) is DmlSpec's.
     Q("m27_merge_on_read",
       (s, d) => {
         val nation = Tables.t(s, d, "nation")
         val src = nation.filter(col("n_nationkey") < 10)
           .select((col("n_nationkey") + 20).as("nk"),
             concat(lit("NEW_"), col("n_name")).as("nm"))
-        Dml.mergeWithDv(nation, Dml.work("m27", d), src,
+        val dir = Dml.work("m27", d)
+        Dml.publish(nation, dir)
+        Dml.mergeOnRead(s, dir, src,
           cond = col("t.n_nationkey") === col("s.nk"),
           assignments = Map("n_name" -> col("s.nm")),
           insertCols = Some(Seq("n_nationkey", "n_name", "n_regionkey")),
@@ -1408,13 +1396,11 @@ object DmlQueries {
              |SELECT * FROM upd UNION ALL SELECT * FROM ins"""
         .stripMargin.replace('\n', ' '))),
 
-    // The SQL surface of merge-on-read: `spark.graft.merge.mode` = "dv"
-    // routes ExecutionContext's MERGE statement through
-    // [[Dml.mergeWithDv]] instead of the full-table rewrite. Shares
-    // m11's relational contract — one oracle, two commit strategies
-    // (m26's discipline applied to MERGE); the store-shape evidence is
-    // ExecutionContextSpec's. The entry mutates its OWN registered view
-    // name and restores the session conf.
+    // The SQL surface of merge-on-read: ExecutionContext's MERGE
+    // statement commits through [[Dml.mergeOnRead]]. Shares m11's
+    // relational contract (m26's discipline applied to MERGE); the
+    // store-shape evidence is ExecutionContextSpec's. The entry mutates
+    // its OWN registered view name.
     Q("m28_sql_mor_merge",
       (s, d) => {
         val ctx = new ExecutionContext(s)
@@ -1422,19 +1408,12 @@ object DmlQueries {
         s.sql("""SELECT n_nationkey + 20 AS nk,
           concat('NEW_', n_name) AS nm FROM g_mor_nation
           WHERE n_nationkey < 10""").createOrReplaceTempView("g_mor_src")
-        val saved = s.conf.getOption("spark.graft.merge.mode")
-        s.conf.set("spark.graft.merge.mode", "dv")
-        try {
-          ctx.execute("""MERGE INTO g_mor_nation USING g_mor_src
-            ON g_mor_nation.n_nationkey = g_mor_src.nk
-            WHEN MATCHED THEN UPDATE SET n_name = g_mor_src.nm
-            WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
-            VALUES (g_mor_src.nk, g_mor_src.nm, 99)""")
-          ctx.execute("SELECT * FROM g_mor_nation")
-        } finally saved match {
-          case Some(v) => s.conf.set("spark.graft.merge.mode", v)
-          case None    => s.conf.unset("spark.graft.merge.mode")
-        }
+        ctx.execute("""MERGE INTO g_mor_nation USING g_mor_src
+          ON g_mor_nation.n_nationkey = g_mor_src.nk
+          WHEN MATCHED THEN UPDATE SET n_name = g_mor_src.nm
+          WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
+          VALUES (g_mor_src.nk, g_mor_src.nm, 99)""")
+        ctx.execute("SELECT * FROM g_mor_nation")
       },
       Some("""WITH src AS (SELECT n_nationkey + 20 AS nk,
              |'NEW_' || n_name AS nm FROM nation WHERE n_nationkey < 10),
@@ -1561,9 +1540,11 @@ object DmlQueries {
     // always survives), and report per-version presence + row count of
     // what remains. The oracle restates the surviving counts from the
     // logical table and the presence flags literally — vacuumed history
-    // MUST read as gone, surviving versions bit-intact. The per-version
-    // count() readouts are metadata-scale maintenance actions (m15's
-    // footer-read class), not a data path.
+    // MUST read as gone, surviving versions bit-intact. v1 survives the
+    // window: its data directory is the one v2 and v3 read through their
+    // `_ref` (vacuum's dangling-ref guard), so it stays readable. The
+    // per-version count() readouts are metadata-scale maintenance
+    // actions (m15's footer-read class), not a data path.
     Q("m16_vacuum",
       (s, d) => {
         val sq = s; import sq.implicits._
@@ -1573,15 +1554,16 @@ object DmlQueries {
         Dml.insertValues(Tables.t(s, d, "nation"), rows, dir) // v0, v1
         Dml.deleteLatest(s, dir, col("n_nationkey") === 25)   // v2
         Dml.deleteLatest(s, dir, col("n_regionkey") === 0)    // v3
-        Dml.vacuum(s, dir, keep = 2)                          // - v0, v1
+        Dml.vacuum(s, dir, keep = 2)                          // - v0
         Seq("v0", "v1", "v2", "v3").map { v =>
-          val p = new java.io.File(s"$dir/$v").exists
+          val p = new java.io.File(s"$dir/$v").exists ||
+            new java.io.File(s"$dir/${v}_ref").exists
           (v, p, if (p) Dml.readVersion(s, dir, v).count() else 0L)
         }.toDF("version", "present", "n_rows")
       },
       Some("""SELECT 'v0' AS version, false AS present,
              |CAST(0 AS BIGINT) AS n_rows
-             |UNION ALL SELECT 'v1', false, 0
+             |UNION ALL SELECT 'v1', true, (SELECT count(*) + 2 FROM nation)
              |UNION ALL SELECT 'v2', true,
              |(SELECT count(*) + 1 FROM nation)
              |UNION ALL SELECT 'v3', true,

@@ -752,8 +752,8 @@ object EventQueries {
     // s16: EXECUTED foreachBatch UPSERT gate — the lakehouse MERGE-INTO
     // lifecycle (EventStreams.upsertedLatest): the event file stream
     // folds micro-batch-by-micro-batch into a committed one-row-per-user
-    // latest-event table under the DML store's copy-on-write + atomic
-    // pointer protocol. The merge is an associative argmax
+    // latest-event table, each version published whole under the DML
+    // store's atomic pointer protocol. The merge is an associative argmax
     // (ts, then unique event_id), so the settled table is independent of
     // micro-batch boundaries and the oracle is the plain batch argmax.
     // The work dir is wiped per run: a stale checkpoint would replay
@@ -1458,7 +1458,7 @@ object EventQueries {
         .stripMargin.replace('\n', ' '))),
 
     // s36: STREAMING MERGE SINK — foreachBatch applying each micro-batch
-    // as a MERGE into the copy-on-write store (the production CDC-apply
+    // as a MERGE into the versioned store (the production CDC-apply
     // / streaming-upsert pattern: Structured Streaming provides ordered
     // exactly-once batch delivery, the store provides the atomic
     // committed version, and MERGE is the idempotent-ish apply in
@@ -1467,8 +1467,11 @@ object EventQueries {
     // per-user totals (matched: n = t.n + s.n; unmatched: insert), and
     // the gate reads the store's final committed version — a user
     // active in both batches must show the SUM, which only holds if
-    // batch 2's merge read batch 1's commit. The oracle restates the
-    // converged state as plain totals.
+    // batch 2's merge read batch 1's commit. The first batch publishes
+    // an empty v0; every batch then commits against the store in place
+    // (Dml.mergeOnRead) — a batch never republishes the committed table
+    // it reads. The oracle restates the converged state as plain
+    // totals.
     Q("s36_stream_merge_sink",
       (s, d) => {
         import org.apache.spark.sql.streaming.Trigger
@@ -1486,12 +1489,10 @@ object EventQueries {
           (batch: DataFrame, _: Long) =>
             val agg = batch.groupBy("user_id")
               .agg(count(lit(1)).as("n"))
-            val base =
-              if (java.nio.file.Files.exists(
+            if (!java.nio.file.Files.exists(
                 java.nio.file.Paths.get(store, "_latest")))
-                Dml.readLatest(s, store)
-              else agg.limit(0) // empty target with the store schema
-            Dml.merge(base, store, agg,
+              Dml.publish(agg.limit(0), store) // empty target, store schema
+            Dml.mergeOnRead(s, store, agg,
               col("t.user_id") === col("s.user_id"),
               Map("n" -> (col("t.n") + col("s.n"))),
               Some(Seq("user_id", "n")),

@@ -63,15 +63,6 @@ object RelationalQueries {
   private def dsum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** Like [[dsum]] but for PRODUCTS of 2-dp monetary columns (price ×
-    * (1±disc/tax)): the true product has up to 6 decimal digits, so a
-    * 2-dp per-row cast rounds exactly AT the cents boundary — where Spark
-    * (half-up) and DuckDB (half-even) disagree on doubles. Rounding at 6 dp
-    * is far from any boundary (the double is within ~1e-10 of the true
-    * 6-dp value), so both engines produce the identical decimal. */
-  private def dsum6(c: Column): Column =
-    sum(c.cast("decimal(18,6)")).cast("double")
-
   /** Deterministic mean: exact decimal sum → double ÷ exact count. Plain
     * round(avg(double)) is summation-order-dependent and can flip the 4th
     * decimal between engines at larger SFs. */

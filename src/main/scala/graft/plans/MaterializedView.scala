@@ -2595,8 +2595,8 @@ object MvQueries {
       Layouts.deleteDir(s, root)
       val storeDir = s"$root/store"
       val li = Tables.t(s, d, "lineitem")
-      // publish the committed table (v0 snapshot, v1 = all rows)
-      Dml.delete(li, storeDir, lit(false))
+      // publish the committed table as the store's plain v0
+      Dml.publish(li, storeDir)
       Mv.registerStore(s, "lineitem_store", storeDir,
         dims = Seq("l_returnflag"),
         aggCols = Seq(

@@ -298,8 +298,8 @@ object EventStreams {
   /** STREAMING UPSERT via foreachBatch — the lakehouse MERGE-INTO shape
     * none of the other gates cover: each micro-batch folds into a
     * COMMITTED key-latest table (one row per user_id, last event wins)
-    * through the same copy-on-write + atomic `_latest` pointer protocol
-    * as the DML store (DmlQueries), so a concurrent reader always sees a
+    * through the DML store's atomic `_latest` pointer protocol
+    * (DmlQueries), publishing each version whole, so a reader always sees a
     * complete committed version. Because [[latestPerUser]] is an
     * associative merge, the settled table is independent of how the
     * stream was micro-batched — the oracle states the batch argmax.

@@ -295,7 +295,9 @@ class DmlSpec extends SparkSpec {
     // is in-window, and the committed target (v1) must survive too
     Dml.commit(dir, "v1")
     assert(Dml.vacuum(spark, dir, keep = 1) == Seq("v0", "v2"))
-    def present(v: String) = new java.io.File(s"$dir/$v").exists
+    // a version is its data directory or, for a change commit, its ref
+    def present(v: String) = new java.io.File(s"$dir/$v").exists ||
+      new java.io.File(s"$dir/${v}_ref").exists
     assert(!present("v0") && present("v1") && !present("v2") &&
       present("v3"))
     assert(Dml.readLatest(spark, dir).count() == base.count() + 1)
@@ -436,11 +438,13 @@ class DmlSpec extends SparkSpec {
     Dml.deleteLatest(spark, dst, col("k") === 4)
     assert(read(src) == Set((2, "b"), (3, "c"), (4, "d")))
     assert(read(dst) == Set((1, "a"), (2, "b"), (3, "c")))
-    // the clone's own v1 is a REAL directory (copy-on-write divergence)
+    // the clone's own v1 is a REAL directory (its first change folds)
     assert(Files.exists(Paths.get(dst, "v1")))
-    // retention hazard: vacuum the source down to its latest version —
-    // the clone's v0 ref now dangles and time travel to it must fail
-    // loudly (Delta documents the same for shallow clones)
+    // retention hazard: compact the source (its delete is a change
+    // commit still reading v1's data), then vacuum it down to its latest
+    // version — the clone's v0 ref now dangles and time travel to it
+    // must fail loudly (Delta documents the same for shallow clones)
+    Dml.optimize(spark, src)
     val dropped = Dml.vacuum(spark, src, keep = 1)
     assert(dropped.contains("v1"), s"source v1 should vacuum: $dropped")
     intercept[Exception] {
@@ -492,7 +496,7 @@ class DmlSpec extends SparkSpec {
     Dml.insertValues(base,
       Seq((5000L, 1L)).toDF("k", "v"), dir)               // v0, v1
     def parquetFiles(version: String) =
-      Files.list(Paths.get(dir, version)).iterator()
+      Files.list(Paths.get(Dml.versionPath(dir, version))).iterator()
     val beforeFiles = {
       import scala.jdk.CollectionConverters._
       parquetFiles("v1").asScala.count(
@@ -531,10 +535,10 @@ class DmlSpec extends SparkSpec {
       "a DV commit must not write a data directory")
     assert(Dml.versionPath(dir, "v1") == s"$dir/v0")
     assert(new java.io.File(s"$dir/v1_dv").exists, "sidecar must exist")
-    // multiset identity with the copy-on-write twin
-    val cow = Dml.delete(base, Dml.work("spec_dv_cow", sf), pred)
+    // multiset identity with the relational complement
+    val cow = base.filter(!coalesce(pred, lit(false)))
     assert(out.exceptAll(cow).isEmpty && cow.exceptAll(out).isEmpty,
-      "DV read must equal the rewritten complement exactly")
+      "DV read must equal the relational complement exactly")
     // plan-level evidence: the vector applies as a BROADCAST anti-join
     // (the read-overhead contract — no shuffle of the data side)
     val plan = out.queryExecution.executedPlan.toString
@@ -552,10 +556,11 @@ class DmlSpec extends SparkSpec {
       (2, Option.empty[String]), (3, Option("kill")), (3, Option("kill")))
       .toDF("id", "tag")
     // a plain equi-join would never match the NULL-tag rows
-    val out = Dml.deleteWithDv(df, dir, col("tag").isNull)
+    Dml.publish(df, dir)
+    val out = Dml.deleteLatest(spark, dir, col("tag").isNull)
     assert(out.count() == 3 && out.filter(col("tag").isNull).count() == 0)
     // duplicate tuples evaluate the predicate identically: both copies go
-    val out2 = Dml.dvDeleteLatest(spark, dir, col("tag") === "kill")
+    val out2 = Dml.deleteLatest(spark, dir, col("tag") === "kill")
     assert(out2.collect().map(_.getInt(0)).toSeq == Seq(1))
     // still zero rewrite: v2 reads v0's data dir through its own ref,
     // with v1's vector folded into v2's sidecar (no chain replay)
@@ -573,7 +578,8 @@ class DmlSpec extends SparkSpec {
     val total = base.count()
     val deleted = base.filter(col("n_regionkey") === 0).count()
     assert(deleted > 0, "fixture must exercise the delete")
-    Dml.deleteWithDv(base, dir, col("n_regionkey") === 0)
+    Dml.publish(base, dir)
+    Dml.deleteLatest(spark, dir, col("n_regionkey") === 0)
     val h = Dml.history(spark, dir).orderBy("version").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(h == Seq(("v0", total), ("v1", total - deleted)),
@@ -593,7 +599,7 @@ class DmlSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     Dml.insertValues(Seq(1, 2, 3, 4, 5).toDF("id"),
       Seq(6).toDF("id"), dir)                        // v0 (5), v1 (6)
-    Dml.dvDeleteLatest(spark, dir, col("id") === 1)  // v2: ref -> v1
+    Dml.deleteLatest(spark, dir, col("id") === 1)  // v2: ref -> v1
     val dropped = Dml.vacuum(spark, dir, keep = 1)
     assert(dropped == Seq("v0"),
       s"v1 must survive as v2's ref target: dropped $dropped")
@@ -602,7 +608,7 @@ class DmlSpec extends SparkSpec {
       .map(_.getInt(0)).toSeq == Seq(2, 3, 4, 5, 6))
     // roll forward to a plain version, vacuum again: the DV version and
     // its ref target both drop, sidecar and ref file included
-    Dml.deleteLatest(spark, dir, lit(false))         // v3: plain snapshot
+    Dml.optimize(spark, dir)                          // v3: plain snapshot
     val dropped2 = Dml.vacuum(spark, dir, keep = 1)
     assert(dropped2 == Seq("v1", "v2"), s"got $dropped2")
     assert(!new java.io.File(s"$dir/v1").exists)
@@ -620,7 +626,8 @@ class DmlSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dst))
     val base = Tables.t(spark, sf, "nation")
-    val kept = Dml.deleteWithDv(base, src, col("n_regionkey") === 0).count()
+    Dml.publish(base, src)
+    val kept = Dml.deleteLatest(spark, src, col("n_regionkey") === 0).count()
     val clone = Dml.shallowClone(spark, src, dst)
     assert(clone.count() == kept)
     assert(Dml.versionPath(dst, "v0") == s"$src/v0",
@@ -646,17 +653,20 @@ class DmlSpec extends SparkSpec {
     // O(table)
     assert(spark.read.parquet(s"$dir/v1_dv").count() == 5)
     assert(spark.read.parquet(s"$dir/v1_append").count() == 10)
-    // multiset identity with the copy-on-write MERGE
+    // multiset identity with MERGE's relational form: matched rows take
+    // the source name, unmatched source rows insert with region 99
     val src = nation.filter(col("n_nationkey") < 10)
       .select((col("n_nationkey") + 20).as("nk"),
         concat(lit("NEW_"), col("n_name")).as("nm"))
-    val cow = Dml.merge(nation, Dml.work("spec_mor_cow", sf), src,
-      col("t.n_nationkey") === col("s.nk"),
-      Map("n_name" -> col("s.nm")),
-      Some(Seq("n_nationkey", "n_name", "n_regionkey")),
-      Some(Seq(col("s.nk"), col("s.nm"), lit(99))))
+    val upd = nation.join(src, col("n_nationkey") === col("nk"), "left")
+      .select(col("n_nationkey"), when(col("nk").isNotNull, col("nm"))
+        .otherwise(col("n_name")).as("n_name"), col("n_regionkey"))
+    val ins = src.join(nation, col("nk") === col("n_nationkey"), "left_anti")
+      .select(col("nk").as("n_nationkey"), col("nm").as("n_name"),
+        lit(99).as("n_regionkey"))
+    val cow = upd.unionByName(ins)
     assert(out.exceptAll(cow).isEmpty && cow.exceptAll(out).isEmpty,
-      "merge-on-read must equal the rewritten merge exactly")
+      "merge-on-read must equal the relational merge exactly")
   }
 
   test("merge-on-read: the identity assignment (SET x = x) loses no " +
@@ -667,7 +677,8 @@ class DmlSpec extends SparkSpec {
     val nation = Tables.t(spark, sf, "nation")
     val src = nation.filter(col("n_nationkey") < 5)
       .select(col("n_nationkey").as("nk"))
-    val out = Dml.mergeWithDv(nation, dir, src,
+    Dml.publish(nation, dir)
+    val out = Dml.mergeOnRead(spark, dir, src,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("t.n_name")), // identity: image == pre-image
       None, None)
@@ -686,19 +697,20 @@ class DmlSpec extends SparkSpec {
     val src = nation.filter(col("n_nationkey") < 10)
       .select((col("n_nationkey") + 20).as("nk"),
         concat(lit("NEW_"), col("n_name")).as("nm"))
-    Dml.mergeWithDv(nation, dir, src,
+    Dml.publish(nation, dir)
+    Dml.mergeOnRead(spark, dir, src,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("s.nm")),
       Some(Seq("n_nationkey", "n_name", "n_regionkey")),
       Some(Seq(col("s.nk"), col("s.nm"), lit(99)))) // v1: 30 rows
     // append-origin delete: the updated image of key 20
-    Dml.dvDeleteLatest(spark, dir, col("n_name") === "NEW_NATION_0")
+    Dml.deleteLatest(spark, dir, col("n_name") === "NEW_NATION_0")
     assert(spark.read.parquet(s"$dir/v2_dv").count() == 5,
       "an append-origin delete must not grow the vector")
     assert(spark.read.parquet(s"$dir/v2_append").count() == 9,
       "the append copy must drop the deleted image")
     // base-origin delete: key 5 lives in the data directory
-    Dml.dvDeleteLatest(spark, dir, col("n_nationkey") === 5)
+    Dml.deleteLatest(spark, dir, col("n_nationkey") === 5)
     assert(spark.read.parquet(s"$dir/v3_dv").count() == 6,
       "a base-origin delete must grow the vector by its multiplicity")
     assert(Dml.readLatest(spark, dir).count() == n + 5 - 2)
@@ -727,7 +739,8 @@ class DmlSpec extends SparkSpec {
     val src = nation.filter(col("n_nationkey") < 10)
       .select((col("n_nationkey") + 20).as("nk"),
         concat(lit("NEW_"), col("n_name")).as("nm"))
-    val merged = Dml.mergeWithDv(nation, srcDir, src,
+    Dml.publish(nation, srcDir)
+    val merged = Dml.mergeOnRead(spark, srcDir, src,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("s.nm")),
       Some(Seq("n_nationkey", "n_name", "n_regionkey")),
@@ -750,7 +763,8 @@ class DmlSpec extends SparkSpec {
     val nation = Tables.t(spark, sf, "nation")
     val src = nation.filter(col("n_nationkey") < 3)
       .select((col("n_nationkey") + 1000).as("nk")) // matches nothing
-    val out = Dml.mergeWithDv(nation, dir, src,
+    Dml.publish(nation, dir)
+    val out = Dml.mergeOnRead(spark, dir, src,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("t.n_name")), None, None)
     assert(out.exceptAll(nation).isEmpty && nation.exceptAll(out).isEmpty,
@@ -771,7 +785,8 @@ class DmlSpec extends SparkSpec {
       .select((col("n_nationkey") + 20).as("nk"),
         concat(lit("NEW_"), col("n_name")).as("nm"))
     // run 1: real matches + inserts -> v1_dv (5 rows) + v1_append (10)
-    Dml.mergeWithDv(nation, dir, matching,
+    Dml.publish(nation, dir)
+    Dml.mergeOnRead(spark, dir, matching,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("s.nm")),
       Some(Seq("n_nationkey", "n_name", "n_regionkey")),
@@ -780,12 +795,13 @@ class DmlSpec extends SparkSpec {
     // 1's sidecars must not leak into run 2's v1
     val noMatch = nation.filter(col("n_nationkey") < 3)
       .select((col("n_nationkey") + 1000).as("nk"))
-    val out2 = Dml.mergeWithDv(nation, dir, noMatch,
+    Dml.publish(nation, dir)
+    val out2 = Dml.mergeOnRead(spark, dir, noMatch,
       col("t.n_nationkey") === col("s.nk"),
       Map("n_name" -> col("t.n_name")), None, None)
     assert(out2.exceptAll(nation).isEmpty && nation.exceptAll(out2).isEmpty,
       "run 2 must serve the fresh table — stale sidecars leaked")
-    // run 3: the copy-on-write DELETE (snapshot path) on the same dir —
+    // run 3: the external-base DELETE (a folded commit) on the same dir —
     // v1 becomes a PLAIN version; run 1/2's v1 sidecars must die
     val out3 = Dml.delete(nation, dir, lit(false))
     assert(out3.exceptAll(nation).isEmpty && nation.exceptAll(out3).isEmpty)
@@ -804,7 +820,8 @@ class DmlSpec extends SparkSpec {
     val dupSrc = nation.filter(col("n_nationkey") < 2)
       .select(lit(0).as("nk"), col("n_name").as("nm")) // both rows key 0
     val e = intercept[IllegalArgumentException] {
-      Dml.mergeWithDv(nation, dir, dupSrc,
+      Dml.publish(nation, dir)
+      Dml.mergeOnRead(spark, dir, dupSrc,
         col("t.n_nationkey") === col("s.nk"),
         Map("n_name" -> col("s.nm")), None, None)
     }
@@ -894,5 +911,171 @@ class DmlSpec extends SparkSpec {
       assert(spark.table("spec_dml_root")
         .filter(col("n_name") === "MOVED").count() == 1)
     } finally spark.catalog.dropTempView("spec_dml_root")
+  }
+
+  test("one write path: every statement kind equals its relational form " +
+    "(NULL predicates and duplicate tuples included); the chained form " +
+    "commits only _dv/_append/_ref entries and leaves every committed " +
+    "file byte-identical, the external-base form folds into a plain v1") {
+    val sq = spark; import sq.implicits._
+    import org.apache.spark.sql.DataFrame
+    import scala.jdk.CollectionConverters._
+    type R = (Option[Int], Option[String])
+    def df(rows: Seq[(Option[Int], Option[String])]): DataFrame =
+      rows.toDF("k", "v")
+    def rows(d: DataFrame): Seq[R] = d.collect().toSeq
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]),
+        Option(r.getString(1))))
+      .sortBy(_.toString)
+    // duplicate tuples, a NULL value and a NULL key
+    val base: Seq[R] = Seq((Some(1), Some("a")), (Some(2), None),
+      (Some(2), None), (Some(3), Some("c")), (Some(3), Some("c")),
+      (None, Some("n")))
+    // the chained form first commits an INSERT, so a duplicate of a base
+    // tuple lives in the append sidecar when the statement runs
+    val prior: Seq[R] = Seq((Some(2), None), (Some(4), Some("d")))
+    val inserted: Seq[R] = Seq((Some(7), Some("g")), (None, None))
+    val source = Seq((2, "two"), (3, "three"), (9, "nine")).toDF("sk", "sv")
+    val bySource = Map(2 -> "two", 3 -> "three", 9 -> "nine")
+    // TRUE only for k > 1; NULL (not FALSE) for the NULL key
+    val pred = col("k") > 1 || col("v") === "zz"
+    def hit(r: R) = r._1.exists(_ > 1)
+    val cond = col("t.k") === col("s.sk")
+    val setV = Map("v" -> col("s.sv"))
+    val insV = Some(Seq(col("s.sk"), col("s.sv")))
+    def matched(r: R) = r._1.flatMap(bySource.get)
+    def merged(t: Seq[R], sync: Boolean): Seq[R] =
+      t.flatMap(r => matched(r).map(sv => (r._1, Some(sv)))
+          .orElse(if (sync) None else Some(r))) ++
+        bySource.toSeq.filterNot(kv => t.exists(_._1.contains(kv._1)))
+          .map { case (k, v) => (Some(k), Some(v)) }
+    // (kind, external form, chained form, relational form)
+    val stmts: Seq[(String, (DataFrame, String) => DataFrame,
+        String => DataFrame, Seq[R] => Seq[R])] = Seq(
+      ("insert",
+        Dml.insertValues(_, df(inserted), _),
+        Dml.insertLatest(spark, _, df(inserted)),
+        _ ++ inserted),
+      ("update",
+        Dml.update(_, _, pred, Map("v" -> concat(col("v"), lit("!")))),
+        Dml.updateLatest(spark, _, pred,
+          Map("v" -> concat(col("v"), lit("!")))),
+        _.map(r => if (hit(r)) (r._1, r._2.map(_ + "!")) else r)),
+      ("update from",
+        Dml.updateFrom(_, _, source, cond, setV),
+        Dml.updateFromLatest(spark, _, source, cond, setV),
+        _.map(r => matched(r).fold(r)(sv => (r._1, Some(sv))))),
+      ("delete",
+        Dml.delete(_, _, pred),
+        Dml.deleteLatest(spark, _, pred),
+        _.filterNot(hit)),
+      ("merge",
+        Dml.merge(_, _, source, cond, setV, None, insV),
+        Dml.mergeOnRead(spark, _, source, cond, setV, None, insV),
+        merged(_, sync = false)),
+      ("merge by-source delete",
+        Dml.merge(_, _, source, cond, setV, None, insV,
+          notMatchedBySourceDelete = true),
+        Dml.mergeOnRead(spark, _, source, cond, setV, None, insV,
+          notMatchedBySourceDelete = true),
+        merged(_, sync = true)))
+    def files(dir: String): Map[String, Long] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
+        .filterNot(_._1 == "_latest").toMap
+      finally walk.close()
+    }
+    def entries(dir: String) = new java.io.File(dir).list().toSet
+    def sidecarsOf(version: String, names: Set[String]) =
+      names.nonEmpty && names.forall(n =>
+        Seq("_dv", "_append", "_ref").map(version + _).contains(n))
+    stmts.zipWithIndex.foreach { case ((kind, external, chained, rel), i) =>
+      // external base: publish v0, commit the change folded as a plain
+      // v1 (readers of a one-shot store take v1 as a parquet table)
+      val ext = Dml.work(s"spec_onepath_${i}_ext", sf)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ext))
+      val outExt = external(df(base), ext)
+      assert(Dml.currentVersion(ext) == "v1", kind)
+      assert(entries(ext) == Set("_latest", "v0", "v1"),
+        s"$kind (external): ${entries(ext)}")
+      assert(rows(spark.read.parquet(s"$ext/v1")) == rows(outExt), kind)
+      assert(rows(spark.read.parquet(s"$ext/v0")) == rows(df(base)), kind)
+      assert(rows(outExt) == rel(base).sortBy(_.toString),
+        s"$kind (external): ${rows(outExt)}")
+      // chained: the statement runs against a store whose current
+      // version already carries an append sidecar
+      val ch = Dml.work(s"spec_onepath_${i}_chained", sf)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ch))
+      Dml.publish(df(base), ch)
+      Dml.insertLatest(spark, ch, df(prior))
+      val (filesBefore, entriesBefore) = (files(ch), entries(ch))
+      val outCh = chained(ch)
+      assert(Dml.currentVersion(ch) == "v2", kind)
+      val filesAfter = files(ch)
+      assert(filesBefore.forall { case (f, n) => filesAfter.get(f).contains(n) },
+        s"$kind (chained): a committed file changed")
+      assert(sidecarsOf("v2", entries(ch) -- entriesBefore),
+        s"$kind (chained): ${entries(ch) -- entriesBefore}")
+      assert(Dml.versionPath(ch, "v2") == s"$ch/v0", kind)
+      assert(rows(outCh) == rel(base ++ prior).sortBy(_.toString),
+        s"$kind (chained): ${rows(outCh)}")
+      assert(rows(Dml.readLatest(spark, ch)) == rows(outCh), kind)
+    }
+  }
+
+  test("a change commit selects its rows in one query: a time-dependent " +
+    "UPDATE moves every row exactly once, and a non-deterministic " +
+    "predicate is rejected before anything is written") {
+    val dir = Dml.work("spec_dml_time", sf)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    // expiries 1 ms apart across the next 30 s: the statement's clock
+    // falls inside the range, so two clocks would split it differently
+    val start = System.currentTimeMillis()
+    val n = 30000L
+    Dml.publish(spark.range(n).select(col("id"),
+      expr(s"timestamp_millis($start + id)").as("expires_at"),
+      lit(false).as("expired")), dir)
+    val out = Dml.updateLatest(spark, dir,
+      col("expires_at") < current_timestamp(), Map("expired" -> lit(true)))
+    val got = out.collect()
+    val (rowCount, idCount) =
+      (got.length.toLong, got.map(_.getLong(0)).distinct.length.toLong)
+    assert(rowCount == n && idCount == n, "every row exactly once")
+    val (hit, kept) = got.partition(_.getBoolean(2))
+    assert(hit.nonEmpty && kept.nonEmpty, "the clock must split the range")
+    assert(hit.map(_.getLong(0)).max < kept.map(_.getLong(0)).min,
+      "one clock: every expired row precedes every kept row")
+    // rand() would pick different rows for the vector and the images
+    val before = Dml.currentVersion(dir)
+    val e = intercept[IllegalArgumentException] {
+      Dml.deleteLatest(spark, dir, rand() < 0.5)
+    }
+    assert(e.getMessage.contains("deterministic"), e.getMessage)
+    intercept[IllegalArgumentException] {
+      Dml.updateLatest(spark, dir, rand() < 0.5, Map("expired" -> lit(true)))
+    }
+    assert(Dml.currentVersion(dir) == before)
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".")),
+      "a rejected statement leaves no staging entry")
+  }
+
+  test("shallow clone into a reused directory drops the sidecars an " +
+    "earlier clone copied there") {
+    val sq = spark; import sq.implicits._
+    val root = Dml.work("clone_reuse", sf)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val (a, b, dst) = (s"$root/a", s"$root/b", s"$root/clone")
+    val base = Seq(1, 2, 3).toDF("k")
+    Dml.publish(base, a)
+    Dml.insertLatest(spark, a, Seq(4).toDF("k")) // a's v1 carries an append
+    Dml.shallowClone(spark, a, dst)
+    assert(new java.io.File(s"$dst/v0_append").exists)
+    Dml.publish(base, b)                         // b's v0 is plain
+    Dml.shallowClone(spark, b, dst)
+    assert(Dml.readLatest(spark, dst).collect().map(_.getInt(0)).sorted
+      .toSeq == Seq(1, 2, 3))
   }
 }

@@ -784,10 +784,9 @@ class ExecutionContextSpec extends SparkSpec {
     spark.catalog.dropTempView("spec_alter_t")
   }
 
-  test("spark.graft.delete.mode=dv routes the SQL DELETE through a " +
-    "deletion-vector commit (broadcast anti-join in the read plan); " +
-    "the default stays the complement rewrite; both modes agree row " +
-    "for row") {
+  test("SQL DELETE commits a deletion vector (broadcast anti-join in " +
+    "the read plan) and agrees row for row with the relational " +
+    "complement") {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val ctx = new ExecutionContext(spark)
     // private view names (m10's discipline): a SQL DELETE re-registers
@@ -795,44 +794,27 @@ class ExecutionContextSpec extends SparkSpec {
     // post-delete state into every later test in this session
     Tables.t(spark, sf, "customer")
       .createOrReplaceTempView("spec_dvmode_a")
-    Tables.t(spark, sf, "customer")
-      .createOrReplaceTempView("spec_dvmode_b")
     val expected = Tables.t(spark, sf, "customer")
-      .filter(!coalesce(col("c_acctbal") < 0, lit(false))).count()
-    // default mode: plain rewrite — the read is a bare scan, no anti-join
-    val rewrite = ctx.execute("DELETE FROM spec_dvmode_a WHERE c_acctbal < 0")
-    assert(rewrite.count() == expected)
-    assert(!rewrite.queryExecution.executedPlan.toString
-      .contains("LeftAnti"), "rewrite mode must not plan an anti-join")
-    // dv mode: the returned state reads data-minus-vector
-    val saved = spark.conf.getOption("spark.graft.delete.mode")
-    spark.conf.set("spark.graft.delete.mode", "dv")
+      .filter(!coalesce(col("c_acctbal") < 0, lit(false)))
     try {
-      val dv = ctx.execute("DELETE FROM spec_dvmode_b WHERE c_acctbal < 0")
-      assert(dv.count() == expected)
+      val dv = ctx.execute("DELETE FROM spec_dvmode_a WHERE c_acctbal < 0")
+      assert(dv.count() == expected.count())
+      assert(dv.exceptAll(expected).isEmpty &&
+        expected.exceptAll(dv).isEmpty)
       val plan = dv.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin") &&
         plan.contains("LeftAnti"),
-        s"dv mode must plan a broadcast anti-join:\n$plan")
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.graft.delete.mode", v)
-        case None    => spark.conf.unset("spark.graft.delete.mode")
-      }
-      spark.catalog.dropTempView("spec_dvmode_a")
-      spark.catalog.dropTempView("spec_dvmode_b")
-    }
+        s"the DELETE must plan a broadcast anti-join:\n$plan")
+    } finally spark.catalog.dropTempView("spec_dvmode_a")
   }
 
-  test("spark.graft.merge.mode=dv routes the SQL MERGE through a " +
-    "merge-on-read commit (sidecar pair, no data rewrite); the default " +
-    "stays the table rewrite; both modes agree row for row; the SYNC " +
-    "clause always rewrites") {
+  test("SQL MERGE commits merge-on-read (sidecar pair, no data " +
+    "rewrite) and agrees row for row with the relational MERGE; the " +
+    "SYNC clause commits the same way") {
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
     val ctx = new ExecutionContext(spark)
     Tables.t(spark, sf, "nation")
       .createOrReplaceTempView("spec_mormode_a")
-    Tables.t(spark, sf, "nation")
-      .createOrReplaceTempView("spec_mormode_b")
     Tables.t(spark, sf, "nation")
       .createOrReplaceTempView("spec_mormode_c")
     spark.sql("""SELECT n_nationkey + 20 AS nk,
@@ -845,51 +827,49 @@ class ExecutionContextSpec extends SparkSpec {
          WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name, n_regionkey)
          VALUES (spec_mormode_src.nk, spec_mormode_src.nm, 99)""" +
         (if (sync) "\nWHEN NOT MATCHED BY SOURCE THEN DELETE" else "")
-    // default mode: plain rewrite — a real v1 data directory
-    val rewrite = ctx.execute(mergeSql("spec_mormode_a"))
-    val dirA = Dml.work("sql_spec_mormode_a", "ctx")
-    val saved = spark.conf.getOption("spark.graft.merge.mode")
-    spark.conf.set("spark.graft.merge.mode", "dv")
     try {
-      val mor = ctx.execute(mergeSql("spec_mormode_b"))
-      assert(mor.count() == rewrite.count())
-      assert(mor.exceptAll(rewrite).isEmpty &&
-        rewrite.exceptAll(mor).isEmpty,
-        "the two commit strategies must agree row for row")
-      // store shape: the MoR target's dir holds the sidecar pair and
-      // NO v1 data directory; the rewrite target's holds a real v1
-      val dirB = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_mormode_b")
-      assert(!new java.io.File(s"$dirB/v1").exists &&
-        new java.io.File(s"$dirB/v1_append").exists &&
-        new java.io.File(s"$dirB/v1_ref").exists,
-        s"dv mode must commit sidecars, not data: $dirB")
-      val dirARewrite =
-        ExecutionContextSpec.sqlDmlDirOf(spark, "spec_mormode_a")
-      assert(new java.io.File(s"$dirARewrite/v1").exists,
-        "rewrite mode must publish a data directory")
-      // the SYNC clause falls back to rewrite even in dv mode (the
-      // non-matched complement is O(table) either way)
+      val nation = Tables.t(spark, sf, "nation")
+      val src = nation.filter(col("n_nationkey") < 10)
+        .select((col("n_nationkey") + 20).as("nk"),
+          concat(lit("M_"), col("n_name")).as("nm"))
+      val relational = nation
+        .join(src, col("n_nationkey") === col("nk"), "left")
+        .select(col("n_nationkey"), when(col("nk").isNotNull, col("nm"))
+          .otherwise(col("n_name")).as("n_name"), col("n_regionkey"))
+        .unionByName(src
+          .join(nation, col("nk") === col("n_nationkey"), "left_anti")
+          .select(col("nk").as("n_nationkey"), col("nm").as("n_name"),
+            lit(99).as("n_regionkey")))
+      val mor = ctx.execute(mergeSql("spec_mormode_a"))
+      assert(mor.exceptAll(relational).isEmpty &&
+        relational.exceptAll(mor).isEmpty,
+        "the MERGE must equal its relational definition row for row")
+      // store shape: the target's dir holds the sidecar pair and NO v1
+      // data directory
+      val dirA = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_mormode_a")
+      assert(!new java.io.File(s"$dirA/v1").exists &&
+        new java.io.File(s"$dirA/v1_append").exists &&
+        new java.io.File(s"$dirA/v1_ref").exists,
+        s"the MERGE must commit sidecars, not data: $dirA")
+      // the SYNC clause removes every target row through the vector and
+      // appends the images and inserts — still no data rewrite
       val sync = ctx.execute(mergeSql("spec_mormode_c", sync = true))
       val dirC = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_mormode_c")
-      assert(new java.io.File(s"$dirC/v1").exists &&
-        !new java.io.File(s"$dirC/v1_append").exists,
-        "the SYNC clause must take the rewrite path")
+      assert(!new java.io.File(s"$dirC/v1").exists &&
+        new java.io.File(s"$dirC/v1_append").exists,
+        s"the SYNC clause must commit sidecars too: $dirC")
       assert(sync.count() == 10) // 5 updates (20..24) + 5 inserts (25..29)
     } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.graft.merge.mode", v)
-        case None    => spark.conf.unset("spark.graft.merge.mode")
-      }
-      Seq("spec_mormode_a", "spec_mormode_b", "spec_mormode_c",
-        "spec_mormode_src").foreach(spark.catalog.dropTempView)
+      Seq("spec_mormode_a", "spec_mormode_c", "spec_mormode_src")
+        .foreach(spark.catalog.dropTempView)
     }
   }
 
-  test("repeated dv-mode SQL MERGEs against one view REUSE its " +
-    "committed store: the second statement extends the version chain " +
-    "(v2 sidecars in the SAME dir, no re-snapshot) — the O(changes) " +
-    "claim dv mode makes — and an interleaved rewrite-path commit " +
-    "safely falls back to a fresh snapshot") {
+  test("repeated SQL MERGEs against one view REUSE its committed " +
+    "store: the second statement extends the version chain (v2 " +
+    "sidecars in the SAME dir, no re-publish), and a view re-registered " +
+    "in between safely restarts a fresh store") {
+    import org.apache.spark.sql.functions.col
     val ctx = new ExecutionContext(spark)
     Tables.t(spark, sf, "nation")
       .createOrReplaceTempView("spec_dvreuse_t")
@@ -903,8 +883,6 @@ class ExecutionContextSpec extends SparkSpec {
       s"""MERGE INTO spec_dvreuse_t USING $srcView
          ON spec_dvreuse_t.n_nationkey = $srcView.nk
          WHEN MATCHED THEN UPDATE SET n_name = $srcView.nm"""
-    val saved = spark.conf.getOption("spark.graft.merge.mode")
-    spark.conf.set("spark.graft.merge.mode", "dv")
     try {
       ctx.execute(mergeSql("spec_dvreuse_s1"))
       val dir1 = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_dvreuse_t")
@@ -912,8 +890,8 @@ class ExecutionContextSpec extends SparkSpec {
       val out2 = ctx.execute(mergeSql("spec_dvreuse_s2"))
       val dir2 = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_dvreuse_t")
       assert(dir1 == dir2,
-        "the second dv merge must continue the committed store, not " +
-          s"snapshot a new one: $dir1 vs $dir2")
+        "the second merge must continue the committed store, not " +
+          s"publish a new one: $dir1 vs $dir2")
       assert(new java.io.File(s"$dir1/v2_append").exists &&
         !new java.io.File(s"$dir1/v2").exists,
         s"the second commit must be v2 SIDECARS in the same store: $dir1")
@@ -923,23 +901,76 @@ class ExecutionContextSpec extends SparkSpec {
       assert((5 to 7).forall(k => names(k).startsWith("U2_")))
       assert(names.size ==
         Tables.t(spark, sf, "nation").count().toInt)
-      // an interleaved REWRITE-mode commit re-publishes the view under
-      // a different plan: the next dv merge must NOT graft onto the
-      // stale dv chain (it would resurrect pre-rewrite state)
-      spark.conf.set("spark.graft.merge.mode", "rewrite")
-      ctx.execute(mergeSql("spec_dvreuse_s1"))
-      spark.conf.set("spark.graft.merge.mode", "dv")
-      ctx.execute(mergeSql("spec_dvreuse_s2"))
+      // the view re-registered under a different plan: the next merge
+      // must NOT graft onto the stale chain (it would resurrect the
+      // filtered-out row)
+      spark.table("spec_dvreuse_t").filter(col("n_nationkey") =!= 0)
+        .createOrReplaceTempView("spec_dvreuse_t")
+      val out3 = ctx.execute(mergeSql("spec_dvreuse_s2"))
       val dir3 = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_dvreuse_t")
       assert(dir3 != dir1,
-        "after a rewrite-path commit the dv chain must restart fresh")
+        "after the view is re-registered the chain must restart fresh")
       assert(new java.io.File(s"$dir3/v1_append").exists)
+      assert(out3.filter(col("n_nationkey") === 0).isEmpty)
     } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.graft.merge.mode", v)
-        case None    => spark.conf.unset("spark.graft.merge.mode")
-      }
       Seq("spec_dvreuse_t", "spec_dvreuse_s1", "spec_dvreuse_s2")
+        .foreach(spark.catalog.dropTempView)
+    }
+  }
+
+  test("UPDATE, DELETE, INSERT and MERGE against one view chain as " +
+    "v1..v4 in ONE store directory and equal a relational replay; a " +
+    "createOrReplaceTempView in between restarts the store") {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    val sq = spark; import sq.implicits._
+    val ctx = new ExecutionContext(spark)
+    val t0 = Seq((1, "a", 10), (2, "b", 20), (2, "b", 20), (3, "c", 30),
+      (4, null.asInstanceOf[String], 40)).toDF("k", "v", "x")
+    t0.createOrReplaceTempView("spec_chain_t")
+    Seq((2, "B"), (7, "G")).toDF("sk", "sv")
+      .createOrReplaceTempView("spec_chain_src")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)), r.getInt(2)))
+      .toSeq.sortBy(_.toString)
+    try {
+      ctx.execute("UPDATE spec_chain_t SET x = x + 1 WHERE v <> 'c'")
+      val dir = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_chain_t")
+      ctx.execute("DELETE FROM spec_chain_t WHERE k = 3 OR v = 'zz'")
+      ctx.execute("INSERT INTO spec_chain_t VALUES (5, 'e', 50)")
+      val out = ctx.execute("""MERGE INTO spec_chain_t USING spec_chain_src
+        ON spec_chain_t.k = spec_chain_src.sk
+        WHEN MATCHED THEN UPDATE SET v = spec_chain_src.sv
+        WHEN NOT MATCHED THEN INSERT (k, v, x)
+        VALUES (spec_chain_src.sk, spec_chain_src.sv, 0)""")
+      assert(ExecutionContextSpec.sqlDmlDirOf(spark, "spec_chain_t") == dir,
+        "all four statements must commit into one store")
+      assert(Dml.currentVersion(dir) == "v4")
+      (1 to 4).foreach { i =>
+        assert(new java.io.File(s"$dir/v${i}_ref").exists &&
+          !new java.io.File(s"$dir/v$i").exists,
+          s"v$i must be a change commit in $dir")
+      }
+      // relational replay (a NULL `v <> 'c'` leaves key 4 unchanged; the
+      // duplicate key-2 tuples update, survive and merge together)
+      val v1 = t0.withColumn("x", when(col("v") =!= "c", col("x") + 1)
+        .otherwise(col("x")))
+      val v2 = v1.filter(!coalesce(col("k") === 3 || col("v") === "zz",
+        lit(false)))
+      val v3 = v2.unionByName(Seq((5, "e", 50)).toDF("k", "v", "x"))
+      val v4 = v3.withColumn("v", when(col("k") === 2, lit("B"))
+          .otherwise(col("v")))
+        .unionByName(Seq((7, "G", 0)).toDF("k", "v", "x"))
+      assert(rows(out) == rows(v4), s"${rows(out)} vs ${rows(v4)}")
+      assert(rows(spark.table("spec_chain_t")) == rows(v4))
+      // re-registering the view elsewhere restarts a fresh store
+      t0.createOrReplaceTempView("spec_chain_t")
+      ctx.execute("DELETE FROM spec_chain_t WHERE k = 1")
+      val fresh = ExecutionContextSpec.sqlDmlDirOf(spark, "spec_chain_t")
+      assert(fresh != dir && Dml.currentVersion(fresh) == "v1")
+      assert(rows(spark.table("spec_chain_t")) ==
+        rows(t0.filter(col("k") =!= 1)))
+    } finally {
+      Seq("spec_chain_t", "spec_chain_src")
         .foreach(spark.catalog.dropTempView)
     }
   }

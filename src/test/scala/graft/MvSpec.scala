@@ -896,8 +896,8 @@ class MvSpec extends SparkSpec {
     val base = spark.range(4000).select(col("id"),
       (col("id") % 5).cast("string").as("g"),
       (col("id") % 97).as("x"))
-    // publish a plain committed table (v0 snapshot, v1 = all rows)
-    Dml.delete(base, storeDir, lit(false))
+    // publish a plain committed table (the store's v0)
+    Dml.publish(base, storeDir)
     val d0 = Mv.registerStore(spark, "store_probe", storeDir,
       dims = Seq("g"),
       aggCols = Seq(count(lit(1)).as("mv_cnt"), sum(col("x")).as("mv_s")),
@@ -913,7 +913,7 @@ class MvSpec extends SparkSpec {
     }
     assert(summary() == recompute())
     // a PLAIN version's data dir serves raw aggregate scans
-    val served = spark.read.parquet(s"$storeDir/v1")
+    val served = spark.read.parquet(s"$storeDir/v0")
       .groupBy("g").agg(count(lit(1)).as("n"))
     assert(scanRoots(served).exists(_.contains("summary")),
       s"a plain store version must serve:\n" +

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Design measures of a graft checkout: lines of Scala under src/main and
-src/test, and every hand-written Catalyst subclass in src/main (Expression,
+src/test, every hand-written Catalyst subclass in src/main (Expression,
 aggregate, LogicalPlan, SparkPlan, Rule, Strategy), one per line with its
-file. Usage:
+file, and every `spark.graft.*` conf key the code in src/main reads (quoted
+key literals outside comments), one per line. Usage:
   python3 tools/design_stats.py [repo_root]
 """
 import glob, os, re, sys
@@ -45,9 +46,11 @@ def kind(header):
 
 
 found = []
+conf_keys = set()
 for f in scala("src/main"):
     text = re.sub(r"/\*.*?\*/|//[^\n]*", "", open(f, encoding="utf-8").read(),
                   flags=re.S)
+    conf_keys.update(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', text))
     for m in HEADER.finditer(text):
         k = kind(m.group(2))
         if k:
@@ -58,3 +61,6 @@ print(f"test LoC: {loc('src/test')}")
 print(f"hand-written Catalyst classes: {len(found)}")
 for k, name, f in sorted(found):
     print(f"  {k:<13} {name:<26} {f}")
+print(f"spark.graft.* conf keys read: {len(conf_keys)}")
+for key in sorted(conf_keys):
+    print(f"  {key}")

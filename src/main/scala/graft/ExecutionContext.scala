@@ -51,6 +51,10 @@ class ExecutionContext(
     ExecutionContext.dialects.contains(dialect.toLowerCase),
     s"Unsupported dialect: $dialect")
 
+  // Size Spark's codegen cache before this context's first compile, so a
+  // warm statement reuses its generated classes (see graft.Session).
+  Session.prepare(spark)
+
   // Engine-native function surface (the reference's scalar-function
   // passthrough accepts any name unvalidated; ours resolve against the
   // registry). Defined once in GraftFunctions, shared with the

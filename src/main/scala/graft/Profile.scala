@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Diagnostic main: per-query breakdown of build (DataFrame construction +
-  * analysis) vs first execution vs warm re-execution, plus the formatted
+  * analysis) vs first execution vs warm re-execution, with the classes each
+  * run compiled and the warm run's Janino compile time, plus the formatted
   * physical plan for the queries named in args (or the bench set).
   * Usage: runMain graft.Profile [sfDir] [queryName...]
   */
@@ -13,18 +16,19 @@ object Profile {
       if (args.length > 1) args.drop(1).toSeq
       else QueryCatalog.all.filter(_.bench).map(_.name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus, logLevel = "ERROR")
     Tables.ensureRegistered(spark, sfDir)
 
     def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
+    // wall ms, classes compiled and Janino compile ms of one run
+    def compiling(run: => Unit): (Long, Long, Long) = {
+      val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
+      val t0 = System.nanoTime()
+      run
+      (ms(t0), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
+        (CodeGenerator.compileTime - compileNs0) / 1000000)
+    }
 
     if (names.contains("_plans")) {
       // Dump formatted physical plans for the headline queries to PLANS.md
@@ -167,13 +171,18 @@ object Profile {
       val df = qq.build(spark, sfDir)
       df.queryExecution.analyzed // force analysis
       val buildMs = ms(t0)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val coldMs = ms(t1)
-      val t2 = System.nanoTime()
-      qq.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val warmMs = ms(t2)
-      println(f"PROFILE $name%-28s build=${buildMs}%5dms cold=${coldMs}%6dms warm=${warmMs}%6dms")
+      val (coldMs, coldClasses, _) = compiling {
+        df.write.format("noop").mode("overwrite").save()
+      }
+      // classes a warm run compiles come from plans that differ between
+      // runs, or from a codegen cache too small to hold them (graft.Session)
+      val (warmMs, warmClasses, warmCompileMs) = compiling {
+        qq.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      println(f"PROFILE $name%-28s build=${buildMs}%5dms " +
+        f"cold=${coldMs}%6dms cold_compiled=${coldClasses}%3d " +
+        f"warm=${warmMs}%6dms warm_compiled=${warmClasses}%3d " +
+        f"warm_compile=${warmCompileMs}%5dms")
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
         println(qq.build(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))

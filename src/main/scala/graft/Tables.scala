@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
@@ -109,6 +110,23 @@ object Tables {
     } catch { case NonFatal(_) => None }
   }
 
+  /** Rows of the parquet files directly under `dirPath`: the sum of their
+    * footers' row-group counts, read on the driver without a Spark job
+    * and without touching a data page. */
+  private[graft] def footerRowCount(
+      spark: SparkSession, dirPath: String): Long = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val dir = new Path(dirPath)
+    dir.getFileSystem(hadoopConf).listStatus(dir).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf),
+          ParquetMetadataConverter.NO_FILTER)
+          .getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+  }
+
   /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`): names
     * starting with `_` (unless they hold `=`) or `.`, and in-flight
     * `._COPYING_` files, are not part of the table — except the summary
@@ -119,7 +137,7 @@ object Tables {
       !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** Session conf required to read events.parquet; set it at
-    * `SparkSession.builder` time (Bench/Verify/Profile/tests all do). */
+    * session build time ([[Session.local]] does). */
   val nanosAsLongConf: (String, String) =
     "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 

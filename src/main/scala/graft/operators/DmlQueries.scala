@@ -542,7 +542,7 @@ object Dml {
     val sidecar = sidecarRows(spark, dir, cur, "_dv") +
       sidecarRows(spark, dir, cur, "_append")
     if (sidecar < minRows) return None
-    val dataRows = footerRowCount(spark, versionPath(dir, cur))
+    val dataRows = Tables.footerRowCount(spark, versionPath(dir, cur))
     if (dataRows == 0 || sidecar.toDouble / dataRows <= ratio) return None
     Some(snapshot(readVersion(spark, dir, cur), dir, nextVersion(cur)))
   }
@@ -555,7 +555,7 @@ object Dml {
       spark: org.apache.spark.sql.SparkSession,
       dir: String, version: String, suffix: String): Long = {
     val p = java.nio.file.Paths.get(dir, s"$version$suffix")
-    if (java.nio.file.Files.exists(p)) footerRowCount(spark, p.toString)
+    if (java.nio.file.Files.exists(p)) Tables.footerRowCount(spark, p.toString)
     else 0L
   }
 
@@ -627,7 +627,7 @@ object Dml {
     * it. Versions are the immutable `v<N>` directories, ordered by N;
     * the listing is a driver-side METADATA op (a handful of names —
     * the commit log, not data), and the counts come from PARQUET
-    * FOOTER record counts ([[footerRowCount]]) — exactly what a real
+    * FOOTER record counts ([[Tables.footerRowCount]]) — exactly what a real
     * lakehouse log does. r12's form unioned a full read of EVERY
     * version into one Spark plan: correct, but O(versions × table
     * size) per DESCRIBE HISTORY call — a long-lived 100 TB table with
@@ -649,7 +649,7 @@ object Dml {
     // (one sidecar row per deleted base row, see commitChange's origin
     // split) and the append dir holds real rows
     val counts = versions.map { v =>
-      (v, footerRowCount(spark, versionPath(dir, v))
+      (v, Tables.footerRowCount(spark, versionPath(dir, v))
         - sidecarRows(spark, dir, v, "_dv")
         + sidecarRows(spark, dir, v, "_append"))
     }
@@ -659,24 +659,6 @@ object Dml {
       .withColumn("delta_rows",
         col("n_rows") - lag(col("n_rows"), 1).over(ord))
       .withColumn("is_current", col("version") === lit(cur))
-  }
-
-  /** Sum of parquet footer record counts across a version directory —
-    * exact by the parquet spec (row-group metadata carries row counts),
-    * no data pages touched. */
-  private[graft] def footerRowCount(
-      spark: org.apache.spark.sql.SparkSession, dirPath: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).iterator
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
   }
 
   /** SHALLOW CLONE — fork a table WITHOUT copying data (the Delta

@@ -463,7 +463,7 @@ object Mv {
       predInfo(filtered, where)
     val mvBack = Tables.openParquet(spark, mvPath)
     val mvRel = leafRelation(mvBack.queryExecution.analyzed).get
-    val mvRows = Mv.withDisabled { mvBack.count() }
+    val mvRows = Tables.footerRowCount(spark, mvPath)
     BuiltSummary(measures, predConjuncts, predNotNullable, predRanges,
       mvRel, mvRows)
   }
@@ -646,7 +646,7 @@ object Mv {
     }
     val newBack = Tables.openParquet(spark, newPath)
     val newRel = leafRelation(newBack.queryExecution.analyzed).get
-    val newRows = Mv.withDisabled { newBack.count() }
+    val newRows = Tables.footerRowCount(spark, newPath)
     (newPath, newRel, newRows)
   }
 
@@ -674,7 +674,7 @@ object Mv {
     val curDvRows = Dml.sidecarRows(spark, dir, cur, "_dv")
     val curAppendP = Some(s"$dir/${cur}_append")
       .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    def totalRows: Int = (Dml.footerRowCount(spark, curData) - curDvRows +
+    def totalRows: Int = (Tables.footerRowCount(spark, curData) - curDvRows +
       Dml.sidecarRows(spark, dir, cur, "_append")).toInt
     def rebuild(): (Int, Int) = {
       val rebuiltPath =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Output-size probe for the dup-pair family (VERDICT r12 item 7).
   *
   * The pair-emitting dedup queries are OUTPUT-superlinear on the
@@ -40,15 +38,7 @@ object DupScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.nanosAsLongConf._1, graft.Tables.nanosAsLongConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus)
     try graft.Tables.ensureRegistered(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[dupscale] register failed: ${e.getMessage}")

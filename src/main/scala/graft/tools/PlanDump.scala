@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{QueryCatalog, Tables, MvQueries}
-import org.apache.spark.sql.SparkSession
+import graft.{MvQueries, QueryCatalog, Session, Tables}
 
 /** Optimization-round evidence dump: one `.explain("formatted")` file per
   * bench query under plans/<tag>/<name>_<suffix>.txt. Usage:
@@ -17,15 +16,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       args.drop(3).headOption.map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus, logLevel = "ERROR")
     Tables.ensureRegistered(spark, sfDir)
     // same pre-registered MV fixtures as Bench so the MV queries' plans
     // show the rewrite they take in the bench

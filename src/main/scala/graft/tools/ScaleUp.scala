@@ -52,6 +52,8 @@ object ScaleUp {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // no Session.local: nanosAsLong would change the events types copied
+    graft.Session.prepare(spark)
 
     def read(t: String): DataFrame =
       spark.read.parquet(s"$src/$t.parquet")

@@ -584,6 +584,56 @@ class MvSpec extends SparkSpec {
       spark.read.parquet(baseDir).count())
   }
 
+  test("mvRows, summed from the summary's parquet footers, equals its " +
+    "row count after register (a partial summary among them), " +
+    "registerStore and a fold refresh of each") {
+    val root = Dml.work("mv_rows_footer", sf)
+    Layouts.deleteDir(spark, root)
+    val baseDir = s"$root/base"
+    val li = Tables.t(spark, sf, "lineitem")
+      .select("l_returnflag", "l_linestatus", "l_quantity", "l_orderkey")
+    li.repartition(2).write.parquet(baseDir)
+    def assertRows(name: String, stage: String): Unit = {
+      val d = Mv.byName(name).get
+      val counted = Mv.withDisabled { spark.read.parquet(d.mvPath).count() }
+      assert(d.mvRows == counted && counted > 0,
+        s"$name after $stage: mvRows ${d.mvRows}, count() $counted")
+    }
+    Mv.register(spark, "rows_by_order", spark.read.parquet(baseDir),
+      dims = Seq("l_orderkey"),
+      aggCols = Seq(sum(col("l_quantity")).as("mv_q")),
+      mvPath = s"$root/by_order")
+    Mv.register(spark, "rows_partial", spark.read.parquet(baseDir),
+      dims = Seq("l_returnflag", "l_linestatus"),
+      aggCols = Seq(count(lit(1)).as("mv_cnt")),
+      mvPath = s"$root/partial",
+      where = Some(col("l_linestatus") === "F"))
+    Seq("rows_by_order", "rows_partial").foreach(assertRows(_, "register"))
+    // new orders appended: the fold adds summary rows
+    li.select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
+        (col("l_orderkey") + 10000000L).as("l_orderkey"))
+      .filter(col("l_orderkey") % 7 === 0)
+      .repartition(1).write.mode("append").parquet(baseDir)
+    Seq("rows_by_order", "rows_partial").foreach { n =>
+      assert(Mv.refreshIncremental(spark, n)._1 == 1, s"$n must fold")
+      assertRows(n, "a fold refresh")
+    }
+    val storeDir = s"$root/store"
+    Dml.publish(spark.range(3000).select(col("id"),
+      (col("id") % 7).as("g")), storeDir)
+    Mv.registerStore(spark, "rows_store", storeDir, dims = Seq("g"),
+      aggCols = Seq(count(lit(1)).as("mv_cnt")), mvPath = s"$root/store_mv")
+    assertRows("rows_store", "registerStore")
+    Dml.mergeOnRead(spark, storeDir,
+      spark.range(3000, 3100).select(col("id").as("sk")),
+      col("t.id") === col("s.sk"), Map("g" -> col("t.g")),
+      Some(Seq("id", "g")), Some(Seq(col("s.sk"), col("s.sk") % 11)))
+    assert(Mv.refreshIncremental(spark, "rows_store")._1 == 100)
+    assertRows("rows_store", "a store fold refresh")
+    Seq("rows_by_order", "rows_partial", "rows_store")
+      .foreach(Mv.drop(spark, _))
+  }
+
   test("several summaries over ONE base coexist (register no longer " +
     "clobbers) and the coarser query is served by the SMALLEST covering " +
     "summary") {

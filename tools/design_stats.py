@@ -2,8 +2,10 @@
 """Design measures of a graft checkout: lines of Scala under src/main and
 src/test, every hand-written Catalyst subclass in src/main (Expression,
 aggregate, LogicalPlan, SparkPlan, Rule, Strategy), one per line with its
-file, and every `spark.graft.*` conf key the code in src/main reads (quoted
-key literals outside comments), one per line. Usage:
+file, every `spark.graft.*` conf key the code in src/main reads (quoted
+key literals outside comments), one per line, and every file in src/main
+that builds a session (`SparkSession.builder()` outside comments), with
+its count of sites. Usage:
   python3 tools/design_stats.py [repo_root]
 """
 import glob, os, re, sys
@@ -47,10 +49,14 @@ def kind(header):
 
 found = []
 conf_keys = set()
+builders = {}
 for f in scala("src/main"):
     text = re.sub(r"/\*.*?\*/|//[^\n]*", "", open(f, encoding="utf-8").read(),
                   flags=re.S)
     conf_keys.update(re.findall(r'"(spark\.graft\.[A-Za-z0-9_.]+)"', text))
+    n = len(re.findall(r"SparkSession\.builder\(\)", text))
+    if n:
+        builders[os.path.relpath(f, root)] = n
     for m in HEADER.finditer(text):
         k = kind(m.group(2))
         if k:
@@ -64,3 +70,6 @@ for k, name, f in sorted(found):
 print(f"spark.graft.* conf keys read: {len(conf_keys)}")
 for key in sorted(conf_keys):
     print(f"  {key}")
+print(f"SparkSession.builder() sites: {sum(builders.values())}")
+for f, n in sorted(builders.items()):
+    print(f"  {n}  {f}")

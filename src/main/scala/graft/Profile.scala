@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 
 /** Diagnostic main: per-query breakdown of build (DataFrame construction +
   * analysis) vs first execution vs warm re-execution, with the classes each
-  * run compiled and the warm run's Janino compile time, plus the formatted
-  * physical plan for the queries named in args (or the bench set).
+  * run compiled and the warm run's Janino compile time, the rows and bytes
+  * each broadcast built, plus the formatted physical plan for the queries
+  * named in args (or the bench set).
   * Usage: runMain graft.Profile [sfDir] [queryName...]
   */
 object Profile {
@@ -28,6 +32,17 @@ object Profile {
       run
       (ms(t0), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
         (CodeGenerator.compileTime - compileNs0) / 1000000)
+    }
+
+    // every broadcast an executed plan built, through AQE's query stages;
+    // a reused exchange built nothing of its own
+    def broadcasts(p: SparkPlan): Seq[BroadcastExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => broadcasts(a.executedPlan)
+      case s: QueryStageExec => broadcasts(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case b: BroadcastExchangeExec => b +: broadcasts(b.child)
+      case other =>
+        (other.children ++ other.subqueries).flatMap(broadcasts)
     }
 
     if (names.contains("_plans")) {
@@ -183,6 +198,16 @@ object Profile {
         f"cold=${coldMs}%6dms cold_compiled=${coldClasses}%3d " +
         f"warm=${warmMs}%6dms warm_compiled=${warmClasses}%3d " +
         f"warm_compile=${warmCompileMs}%5dms")
+      // one more, untimed run whose own plan holds the exchanges' metrics
+      // (the noop writes above plan and run a separate command): a
+      // broadcast of a fact table shows as a build of its full row count
+      val qe = qq.build(spark, sfDir).queryExecution
+      qe.toRdd.foreach(_ => ())
+      broadcasts(qe.executedPlan).foreach { b =>
+        println(f"BROADCAST $name%-28s " +
+          f"rows=${b.metrics("numOutputRows").value}%9d " +
+          f"data_bytes=${b.metrics("dataSize").value}%11d")
+      }
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
         println(qq.build(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))

@@ -3,11 +3,16 @@ package graft
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -38,10 +43,29 @@ import org.apache.spark.sql.types.StructType
   * while probing — so in those cases the schema and the errors stay
   * Spark's own.
   *
+  * How a table is sized for the planner: `sizeInBytes = max(Spark's own
+  * estimate, rows × EstimationUtils.getSizePerRow(output))`, carried as a
+  * size-only `CatalogStatistics` on the `LogicalRelation` (no row count,
+  * no column statistics: CBO is not involved). The rows come from the
+  * same footer read, its row-group counts scaled by (all data-file bytes
+  * ÷ that file's bytes) when the root holds several files. Spark's own
+  * estimate is the compressed parquet bytes, and the planner compares
+  * sizes against `autoBroadcastJoinThreshold` as if they were rows in
+  * memory: at sf0.1 lineitem is 10.8 MB of parquet, and a scan pruned to
+  * 4 columns is scaled down by its row width to a few MB, so a star join
+  * broadcast all 600,000 lineitem rows, hashing them into one relation on
+  * the driver. Sized by rows × width (600,000 × 40 bytes for those 4
+  * columns) it is above the 10 MB threshold and is shuffled instead;
+  * AQE still broadcasts from runtime sizes. The estimate never falls
+  * below Spark's, so no relation becomes newly broadcastable. Every
+  * fallback above, and a summary-file footer (it holds no count of the
+  * data files beside it), keeps Spark's estimate.
+  *
   * Scale note: at 100 TB each table is a multi-file dataset and the same
-  * read distributes splits across executors. The driver reads one footer
-  * and lists each root one level deep — Spark's file index lists it again
-  * — and materializes nothing else.
+  * read distributes splits across executors. The driver still reads one
+  * footer — the row estimate is scaled from it, not summed over every
+  * file — lists each root one level deep (Spark's file index lists it
+  * again) and materializes nothing else.
   */
 object Tables {
   val starSchema: Seq[String] = Seq(
@@ -63,23 +87,32 @@ object Tables {
     df
   }
 
-  /** `spark.read.parquet(paths: _*)` without the schema-inference job: see
-    * the object doc for which footer is read and when this falls back. */
+  /** `spark.read.parquet(paths: _*)` without the schema-inference job,
+    * sized by its rows: see the object doc for which footer is read, how
+    * the size is estimated and when this falls back. */
   def openParquet(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+    footer(spark, paths) match {
+      case Some((schema, rows)) =>
+        val df = spark.read.schema(schema).parquet(paths: _*)
+        rows.fold(df)(sizedByRows(df, _))
       case None => spark.read.parquet(paths: _*)
     }
 
-  /** The schema Spark's non-merging inference (`ParquetUtils.inferSchema`)
-    * would return, read from one footer on the driver, or None when
-    * [[openParquet]] must fall back. The leaves are the roots' visible
-    * files sorted by path; the footer is `_common_metadata`, else
-    * `_metadata`, else the first data file; the conversion is Spark's own
-    * `readSchemaFromFooter` (row-metadata JSON first, else the converter
-    * configured from the session: nanosAsLong, INT96, binary-as-string). */
+  /** The schema [[openParquet]] reads from the footer, or None when it
+    * falls back. */
   private[graft] def footerSchema(
-      spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+      spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    footer(spark, paths).map(_._1)
+
+  /** The schema Spark's non-merging inference (`ParquetUtils.inferSchema`)
+    * would return and the estimated rows of all data files, from one
+    * footer read on the driver, or None when [[openParquet]] must fall
+    * back. The leaves are the roots' visible files sorted by path; the
+    * footer is `_common_metadata`, else `_metadata`, else the first data
+    * file. The rows are that file's count scaled by (all data-file bytes
+    * ÷ its bytes), and None when the footer is a summary file. */
+  private def footer(spark: SparkSession, paths: Seq[String])
+      : Option[(StructType, Option[BigInt])] = {
     val conf = spark.sessionState.conf
     val globChars = "{}[]*?\\"
     if (paths.isEmpty || conf.isParquetSchemaMergingEnabled ||
@@ -97,18 +130,56 @@ object Tables {
         ParquetFileWriter.PARQUET_METADATA_FILE)
       val data = leaves.filterNot(st => summaries.contains(st.getPath.getName))
       if (leaves.exists(_.isDirectory) || data.isEmpty) None
-      else {
-        val pick = summaries.flatMap(n => leaves.find(_.getPath.getName == n))
-          .headOption.getOrElse(data.head)
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(pick, hadoopConf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        Some(ParquetFileFormat.readSchemaFromFooter(
-          new Footer(pick.getPath, footer),
-          new ParquetToSparkSchemaConverter(conf)))
+      else summaries.flatMap(n => leaves.find(_.getPath.getName == n))
+        .headOption match {
+        case Some(summary) =>
+          Some((readFooter(spark, summary, hadoopConf)._1, None))
+        case None =>
+          val (schema, rows) = readFooter(spark, data.head, hadoopConf)
+          val bytes = data.map(st => BigInt(st.getLen)).sum
+          Some((schema, Some(BigInt(rows) * bytes / data.head.getLen)))
       }
     } catch { case NonFatal(_) => None }
   }
+
+  /** One footer, read once: the schema through Spark's own
+    * `readSchemaFromFooter` (row-metadata JSON first, else the converter
+    * configured from the session: nanosAsLong, INT96, binary-as-string)
+    * and the sum of its row groups' counts. No Spark job, no data page. */
+  private def readFooter(spark: SparkSession, file: FileStatus,
+      hadoopConf: Configuration): (StructType, Long) = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoopConf),
+      ParquetMetadataConverter.NO_FILTER)
+    (ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)),
+      meta.getBlocks.asScala.map(_.getRowCount).sum)
+  }
+
+  /** `df`'s relation with `sizeInBytes = max(Spark's estimate, rows ×
+    * EstimationUtils.getSizePerRow(output))`, carried as a size-only
+    * `CatalogStatistics` on the `LogicalRelation`; `df` itself when
+    * Spark's estimate is already the larger. The entry is named after
+    * the roots, so a row-sized scan shows in a plan as
+    * `Scan parquet lineitem.parquet`. It is never registered in a
+    * catalog, and canonicalization drops it, so cache lookups still match
+    * the same files. */
+  private def sizedByRows(df: DataFrame, rows: BigInt): DataFrame =
+    df.queryExecution.analyzed match {
+      case l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        val bytes = rows * EstimationUtils.getSizePerRow(l.output)
+        if (bytes <= fs.sizeInBytes) df
+        else GraftBridge.ofRows(df.sparkSession, l.copy(catalogTable = Some(
+          CatalogTable(
+            identifier = TableIdentifier(
+              fs.location.rootPaths.map(_.getName).mkString(",")),
+            tableType = CatalogTableType.EXTERNAL,
+            storage = CatalogStorageFormat.empty,
+            schema = l.schema,
+            provider = Some("parquet"),
+            stats = Some(CatalogStatistics(sizeInBytes = bytes))))))
+      case _ => df
+    }
 
   /** Rows of the parquet files directly under `dirPath`: the sum of their
     * footers' row-group counts, read on the driver without a Spark job
@@ -119,12 +190,7 @@ object Tables {
     val dir = new Path(dirPath)
     dir.getFileSystem(hadoopConf).listStatus(dir).iterator
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(st, hadoopConf),
-          ParquetMetadataConverter.NO_FILTER)
-          .getBlocks.asScala.map(_.getRowCount).sum
-      }.sum
+      .map(readFooter(spark, _, hadoopConf)._2).sum
   }
 
   /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`): names

@@ -27,14 +27,18 @@ object RelationalQueries {
 
   /** SIZE-GATED broadcast hint (guide §3.1): apply `broadcast(df)` only
     * when the on-disk bytes of the tables feeding `df` (Skew.advisoryFor's
-    * probe) are under `limitBytes` — at fixture scale the hint overrides a
-    * bad planner build-side pick (r17 measurement: the q30 planner
-    * broadcast the 600 k-row LINEITEM instead of the ~10× smaller filtered
-    * customer⋈orders subtree), while at production scale the probe blows
-    * the limit and the plan stays planner-decided (sort-merge), so the
-    * hint can never demand an impossible broadcast. Default limit 256 MiB
-    * of source parquet ≈ well under the 8 GiB broadcast cap after
-    * filter+project. Conf `spark.graft.broadcastProbeLimit` overrides. */
+    * probe) are under `limitBytes`. The planner no longer broadcasts
+    * lineitem ([[Tables.openParquet]] sizes it by its rows), but it sizes
+    * a join as the product of its inputs, so it cannot see that q30's
+    * filtered customer⋈orders subtree is small: it shuffles lineitem into
+    * a sort-merge join, and AQE broadcasts the subtree only after
+    * lineitem's shuffle is written. The hint broadcasts the subtree up
+    * front and streams lineitem (q30 at sf0.1, 4 cores: 0.69 s hinted,
+    * 0.93 s planner-only). At production scale the probe blows the limit
+    * and the plan stays planner-decided, so the hint can never demand an
+    * impossible broadcast. Default limit 256 MiB of source parquet ≈ well
+    * under the 8 GiB broadcast cap after filter+project. Conf
+    * `spark.graft.broadcastProbeLimit` overrides. */
   private def broadcastIfSmall(
       s: SparkSession, dir: String, tables: Seq[String])(
       df: DataFrame): DataFrame = {
@@ -515,16 +519,15 @@ object RelationalQueries {
       bench = true),
 
     Q("q30_local_supplier_volume",
-      // r17 optimization (guide §3.1/§2.3): STREAM the fact. The original
-      // dim-to-fact join order let the planner pick LINEITEM as the
-      // broadcast build side (600 k rows hashed into one relation, the
-      // single most expensive operator in the r16 plan); rewritten so the
-      // fact is the probe side of every join and the 2-long-column
-      // filtered customer⋈orders subtree — ~10× fewer rows after the
-      // 2-year date filter — is the build side, size-gated via
-      // [[broadcastIfSmall]] so production scale falls back to the
-      // planner. Same joins, same predicates, identical output (driver
-      // hash re-verified); sf0.1 median 1.18 s → ~0.75 s.
+      // STREAM the fact (guide §3.1/§2.3): lineitem is the probe side of
+      // every join and the 2-long-column filtered customer⋈orders
+      // subtree — ~10× fewer rows after the 2-year date filter — is the
+      // build side, size-gated via [[broadcastIfSmall]] so production
+      // scale falls back to the planner. Without the hint the planner
+      // shuffles lineitem to a sort-merge join, since it cannot estimate
+      // the filtered subtree as small (see [[broadcastIfSmall]]). Same
+      // joins, same predicates, identical output (driver hash
+      // re-verified).
       (s, d) => {
         val co = t(s, d, "customer")
           .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))

@@ -239,7 +239,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val fullLine = s"""{"sf":${JsonOut.str(sfName)},"failed":$failed,"runs":3,"stat":"best-of-$nPasses-pass median","passes":$passesJson,"pass_failed":$passFailedJson,"cal":$calFull,"queries":$full,"unit":"sec","metric":"total","value":${f4(total)}}"""
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_LAST.json"), fullLine)
+      java.nio.file.Paths.get("BENCH_LAST.json"), fullLine)
     catch { case _: Throwable => () }
     spark.stop()
   }

@@ -99,11 +99,14 @@ object GraftFunctions {
   * experimental batch, but a second session in the same JVM shares the
   * registry and would otherwise silently never rewrite. Double
   * installation is harmless: the rule is idempotent (a rewritten
-  * aggregate scans the summary, whose roots match no registered base). */
+  * aggregate scans the summary, whose roots match no registered base).
+  * [[SmallSortStrategy]] rides along for the same reason: [[Session.prepare]]
+  * adds it only to the sessions graft prepares. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.entries.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => new AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => SmallSortStrategy)
     ext.injectOptimizerRule(_ => new AsOfJoinFilterPushdown)
     ext.injectOptimizerRule(_ => Mv.MvRewrite)
   }

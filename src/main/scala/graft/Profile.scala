@@ -1,16 +1,20 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 
 /** Diagnostic main: per-query breakdown of build (DataFrame construction +
-  * analysis) vs first execution vs warm re-execution, with the classes each
-  * run compiled and the warm run's Janino compile time, the rows and bytes
-  * each broadcast built, plus the formatted physical plan for the queries
-  * named in args (or the bench set).
+  * analysis) vs first execution vs warm re-execution, with the Spark jobs
+  * each run started, the classes each run compiled and the warm run's
+  * Janino compile time, the rows and bytes each broadcast built, plus the
+  * formatted physical plan for the queries named in args (or the bench
+  * set). The warm run also rebuilds the query, so its jobs include any
+  * the build starts.
   * Usage: runMain graft.Profile [sfDir] [queryName...]
   */
 object Profile {
@@ -24,13 +28,24 @@ object Profile {
     Tables.ensureRegistered(spark, sfDir)
 
     def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
-    // wall ms, classes compiled and Janino compile ms of one run
-    def compiling(run: => Unit): (Long, Long, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    // wall ms, Spark jobs started, classes compiled and Janino compile ms
+    // of one run; the drain makes the job count cover the whole run
+    def compiling(run: => Unit): (Long, Long, Long, Long) = {
       val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
+      GraftBridge.drainListenerBus(spark)
+      val jobs0 = jobs.get
       val t0 = System.nanoTime()
       run
-      (ms(t0), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
+      val wall = ms(t0)
+      GraftBridge.drainListenerBus(spark)
+      (wall, jobs.get - jobs0,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
         (CodeGenerator.compileTime - compileNs0) / 1000000)
     }
 
@@ -65,7 +80,7 @@ object Profile {
         sb.append(s"\n## ${qq.name}\n\n```\n$plan```\n")
       }
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
+        java.nio.file.Paths.get("PLANS.md"), sb.toString)
       println("PLANS written: " + sb.length + " chars")
       spark.stop(); return
     }
@@ -186,17 +201,19 @@ object Profile {
       val df = qq.build(spark, sfDir)
       df.queryExecution.analyzed // force analysis
       val buildMs = ms(t0)
-      val (coldMs, coldClasses, _) = compiling {
+      val (coldMs, coldJobs, coldClasses, _) = compiling {
         df.write.format("noop").mode("overwrite").save()
       }
       // classes a warm run compiles come from plans that differ between
       // runs, or from a codegen cache too small to hold them (graft.Session)
-      val (warmMs, warmClasses, warmCompileMs) = compiling {
+      val (warmMs, warmJobs, warmClasses, warmCompileMs) = compiling {
         qq.build(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
       println(f"PROFILE $name%-28s build=${buildMs}%5dms " +
-        f"cold=${coldMs}%6dms cold_compiled=${coldClasses}%3d " +
-        f"warm=${warmMs}%6dms warm_compiled=${warmClasses}%3d " +
+        f"cold=${coldMs}%6dms cold_jobs=${coldJobs}%3d " +
+        f"cold_compiled=${coldClasses}%3d " +
+        f"warm=${warmMs}%6dms warm_jobs=${warmJobs}%3d " +
+        f"warm_compiled=${warmClasses}%3d " +
         f"warm_compile=${warmCompileMs}%5dms")
       // one more, untimed run whose own plan holds the exchanges' metrics
       // (the noop writes above plan and run a separate command): a

@@ -28,6 +28,16 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * is 2,000, 2.6× the battery's 780. The bound counts classes, not bytes;
   * a cached class holds its metaspace until it is evicted.
   *
+  * The cache key is the generated source, and by default a whole-stage
+  * class is named after its codegen stage id. Under AQE the ids follow the
+  * order in which query stages finish, so the same pipeline can get
+  * another id on the next run: the first warm runs of t08 and t37 at
+  * sf0.001 recompiled 3 and 2 hash-aggregate pipelines whose source
+  * differed from the cold run's only in that name. [[local]] sets
+  * `spark.sql.codegen.useIdInClassName` to false, so every whole-stage
+  * class is named `GeneratedIterator` and such runs hit the cache; the id
+  * stays in the generated comment and in plan strings.
+  *
   * Spark's own key stays the only override: when a session's conf sets
   * `spark.sql.codegen.cache.maxEntries`, its value is the one used.
   *
@@ -55,15 +65,24 @@ object Session {
 
   /** Size Spark's codegen cache now: initialize `CodeGenerator` under
     * [[codegenConf]] of the session. No effect when code was generated
-    * earlier in this JVM (see the object doc). */
-  def prepare(spark: SparkSession): Unit =
+    * earlier in this JVM (see the object doc). Then add
+    * [[SmallSortStrategy]] to the session's planner, once. */
+  def prepare(spark: SparkSession): Unit = {
     SQLConf.withExistingConf(codegenConf(spark.sessionState.conf)) {
       CodeGenerator.compileTime
     }
+    // the planner's list holds the experimental and the injected strategies
+    if (!spark.sessionState.planner.strategies.contains(SmallSortStrategy)) {
+      val exp = spark
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+      exp.extraStrategies = exp.extraStrategies :+ SmallSortStrategy
+    }
+  }
 
   /** graft's session on `local[cpus]`: `cpus` shuffle partitions, UTC,
     * the nanos-as-long parquet flag events.parquet needs, AQE on, no UI,
-    * and the codegen cache key; then [[prepare]]. */
+    * the codegen cache key and whole-stage class names without the stage
+    * id; then [[prepare]]. */
   def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -73,6 +92,7 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config(CacheKey, CodegenCacheEntries.toString)
+      .config(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     prepare(spark)

@@ -88,13 +88,14 @@ object Verify {
       finally ManagedCache.releaseAll()
     }
     // Machine-readable failure summary alongside the oracle manifest,
-    // mirrored into the repo so a red row's exception text is readable
-    // in-tree next round (the driver's outDir isn't committed).
+    // mirrored into the working directory (the checkout sbt runs from)
+    // so a red row's exception text is readable in-tree next round (the
+    // output directory itself isn't committed).
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     try Files.writeString(
-      Paths.get("/root/repo/VERIFY_ERRORS.json"), errJson)
+      Paths.get("VERIFY_ERRORS.json"), errJson)
     catch { case _: Throwable => () }
     spark.stop()
   }

@@ -42,7 +42,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = args.lift(1).getOrElse("/root/repo/target/scaledata/sf1")
+    val dst = args.lift(1).getOrElse("target/scaledata/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

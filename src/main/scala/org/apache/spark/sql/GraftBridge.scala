@@ -8,6 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * `org.apache.spark.sql` package solely to re-export those two calls —
   * the standard extension-library pattern. */
 object GraftBridge {
+  /** Block until the listener bus has delivered every event posted so
+    * far (`waitUntilEmpty` is `private[spark]`), so a listener's counts
+    * cover everything that ran before the call. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 

@@ -100,8 +100,11 @@ object GraftFunctions {
   * registry and would otherwise silently never rewrite. Double
   * installation is harmless: the rule is idempotent (a rewritten
   * aggregate scans the summary, whose roots match no registered base).
-  * [[SmallSortStrategy]] rides along for the same reason: [[Session.prepare]]
-  * adds it only to the sessions graft prepares. */
+  * [[SmallSortStrategy]] and [[SmallSideBroadcast]] ride along for the
+  * same reason: [[Session.prepare]] adds them only to the sessions graft
+  * prepares. The broadcast rule goes in as a pre-CBO rule, so it runs
+  * after the operator-optimization batch that holds the MV rewrite and
+  * sees the join order and pruned columns Spark settled on. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.entries.foreach(ext.injectFunction)
@@ -109,5 +112,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => SmallSortStrategy)
     ext.injectOptimizerRule(_ => new AsOfJoinFilterPushdown)
     ext.injectOptimizerRule(_ => Mv.MvRewrite)
+    ext.injectPreCBORule(_ => SmallSideBroadcast)
   }
 }

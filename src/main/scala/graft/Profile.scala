@@ -4,6 +4,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.expressions.ExprId
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
@@ -11,7 +13,9 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
 /** Diagnostic main: per-query breakdown of build (DataFrame construction +
   * analysis) vs first execution vs warm re-execution, with the Spark jobs
   * each run started, the classes each run compiled and the warm run's
-  * Janino compile time, the rows and bytes each broadcast built, plus the
+  * Janino compile time, the rows and bytes each broadcast built (and,
+  * for a side [[SmallSideBroadcast]] chose, graft's estimate of its
+  * rows, so a bad estimate shows), plus the
   * formatted physical plan for the queries named in args (or the bench
   * set). The warm run also rebuilds the query, so its jobs include any
   * the build starts.
@@ -59,6 +63,16 @@ object Profile {
       case other =>
         (other.children ++ other.subqueries).flatMap(broadcasts)
     }
+
+    // graft's row estimate of each side SmallSideBroadcast hinted, by the
+    // side's output, which the broadcast exchange built from it keeps
+    def chosenSides(p: LogicalPlan): Map[Set[ExprId], BigInt] =
+      p.collect { case j: Join =>
+        j.getTagValue(SmallSideBroadcast.EstimatedRows).map { n =>
+          val side = if (j.hint.leftHint.isDefined) j.left else j.right
+          side.output.map(_.exprId).toSet -> n
+        }
+      }.flatten.toMap
 
     if (names.contains("_plans")) {
       // Dump formatted physical plans for the headline queries to PLANS.md
@@ -220,10 +234,13 @@ object Profile {
       // broadcast of a fact table shows as a build of its full row count
       val qe = qq.build(spark, sfDir).queryExecution
       qe.toRdd.foreach(_ => ())
+      val estimated = chosenSides(qe.optimizedPlan)
       broadcasts(qe.executedPlan).foreach { b =>
+        val est = estimated.get(b.output.map(_.exprId).toSet)
+          .fold("")(n => s" est_rows=$n")
         println(f"BROADCAST $name%-28s " +
           f"rows=${b.metrics("numOutputRows").value}%9d " +
-          f"data_bytes=${b.metrics("dataSize").value}%11d")
+          f"data_bytes=${b.metrics("dataSize").value}%11d$est")
       }
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
         println(qq.build(spark, sfDir).queryExecution.explainString(

@@ -66,17 +66,21 @@ object Session {
   /** Size Spark's codegen cache now: initialize `CodeGenerator` under
     * [[codegenConf]] of the session. No effect when code was generated
     * earlier in this JVM (see the object doc). Then add
-    * [[SmallSortStrategy]] to the session's planner, once. */
+    * [[SmallSortStrategy]] to the session's planner and
+    * [[SmallSideBroadcast]] to its user optimizer batch (where
+    * [[Mv.install]] keeps [[Mv.MvRewrite]] ahead of it), each once. */
   def prepare(spark: SparkSession): Unit = {
     SQLConf.withExistingConf(codegenConf(spark.sessionState.conf)) {
       CodeGenerator.compileTime
     }
+    val exp = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     // the planner's list holds the experimental and the injected strategies
-    if (!spark.sessionState.planner.strategies.contains(SmallSortStrategy)) {
-      val exp = spark
-        .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!spark.sessionState.planner.strategies.contains(SmallSortStrategy))
       exp.extraStrategies = exp.extraStrategies :+ SmallSortStrategy
-    }
+    if (!(spark.sessionState.optimizer.preCBORules ++
+        exp.extraOptimizations).contains(SmallSideBroadcast))
+      exp.extraOptimizations = exp.extraOptimizations :+ SmallSideBroadcast
   }
 
   /** graft's session on `local[cpus]`: `cpus` shuffle partitions, UTC,

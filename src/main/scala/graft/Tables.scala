@@ -7,14 +7,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 /** Table registry over the driver-generated parquet star schema
   * (`/root/testdata/sf*`, see TESTDATA.md / FIXTURES.md §B).
@@ -61,6 +63,14 @@ import org.apache.spark.sql.types.StructType
   * fallback above, and a summary-file footer (it holds no count of the
   * data files beside it), keeps Spark's estimate.
   *
+  * What is recorded for the join planner: when a root is one data file,
+  * the same entry carries that footer's exact row count and the min/max
+  * of its integer columns as table properties ([[FooterFacts]]).
+  * [[SmallSideBroadcast]] sizes inner equi-joins with them: a side's
+  * rows, and whether a join key's range leaves room for distinct values.
+  * They come from the footer already read, so recording them costs no
+  * I/O; a multi-file root records nothing, because its count is scaled.
+  *
   * Scale note: at 100 TB each table is a multi-file dataset and the same
   * read distributes splits across executors. The driver still reads one
   * footer — the row estimate is scaled from it, not summed over every
@@ -92,9 +102,9 @@ object Tables {
     * the size is estimated and when this falls back. */
   def openParquet(spark: SparkSession, paths: String*): DataFrame =
     footer(spark, paths) match {
-      case Some((schema, rows)) =>
+      case Some((schema, rows, facts)) =>
         val df = spark.read.schema(schema).parquet(paths: _*)
-        rows.fold(df)(sizedByRows(df, _))
+        rows.fold(df)(sizedByRows(df, _, facts))
       case None => spark.read.parquet(paths: _*)
     }
 
@@ -110,9 +120,11 @@ object Tables {
     * back. The leaves are the roots' visible files sorted by path; the
     * footer is `_common_metadata`, else `_metadata`, else the first data
     * file. The rows are that file's count scaled by (all data-file bytes
-    * ÷ its bytes), and None when the footer is a summary file. */
+    * ÷ its bytes), and None when the footer is a summary file. Then the
+    * [[FooterFacts]] to record, only when that file is the one data
+    * file, so its count is exact. */
   private def footer(spark: SparkSession, paths: Seq[String])
-      : Option[(StructType, Option[BigInt])] = {
+      : Option[(StructType, Option[BigInt], Option[FooterFacts])] = {
     val conf = spark.sessionState.conf
     val globChars = "{}[]*?\\"
     if (paths.isEmpty || conf.isParquetSchemaMergingEnabled ||
@@ -133,11 +145,14 @@ object Tables {
       else summaries.flatMap(n => leaves.find(_.getPath.getName == n))
         .headOption match {
         case Some(summary) =>
-          Some((readFooter(spark, summary, hadoopConf)._1, None))
+          Some((readFooter(spark, summary, hadoopConf)._1, None, None))
         case None =>
-          val (schema, rows) = readFooter(spark, data.head, hadoopConf)
+          val (schema, meta) = readFooter(spark, data.head, hadoopConf)
+          val rows = rowCount(meta)
           val bytes = data.map(st => BigInt(st.getLen)).sum
-          Some((schema, Some(BigInt(rows) * bytes / data.head.getLen)))
+          Some((schema, Some(BigInt(rows) * bytes / data.head.getLen),
+            Option.when(data.size == 1)(
+              FooterFacts(rows, integerRanges(schema, meta)))))
       }
     } catch { case NonFatal(_) => None }
   }
@@ -145,30 +160,87 @@ object Tables {
   /** One footer, read once: the schema through Spark's own
     * `readSchemaFromFooter` (row-metadata JSON first, else the converter
     * configured from the session: nanosAsLong, INT96, binary-as-string)
-    * and the sum of its row groups' counts. No Spark job, no data page. */
+    * and the footer itself, row groups and their column statistics
+    * included. No Spark job, no data page. */
   private def readFooter(spark: SparkSession, file: FileStatus,
-      hadoopConf: Configuration): (StructType, Long) = {
+      hadoopConf: Configuration): (StructType, ParquetMetadata) = {
     val meta = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, hadoopConf),
       ParquetMetadataConverter.NO_FILTER)
     (ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf)),
-      meta.getBlocks.asScala.map(_.getRowCount).sum)
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)), meta)
   }
+
+  private def rowCount(meta: ParquetMetadata): Long =
+    meta.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** What [[openParquet]] records of a relation read from one data file:
+    * its exact row count, and the min/max of each top-level integer column
+    * that every row group has statistics for. [[SmallSideBroadcast]]
+    * sizes joins with them. */
+  private[graft] final case class FooterFacts(
+      rows: Long, ranges: Map[String, (Long, Long)])
+
+  private val RowsKey = "graft.footer.rows"
+  private val RangeKey = "graft.footer.range."
+
+  /** Min and max per top-level signed integer column (`byte` to `bigint`
+    * in `schema`), over every row group; a column any row group has no
+    * statistics for (or only nulls) is left out. */
+  private def integerRanges(schema: StructType, meta: ParquetMetadata)
+      : Map[String, (Long, Long)] = {
+    val integral = schema.fields.collect {
+      case f if Seq(ByteType, ShortType, IntegerType, LongType)
+          .contains(f.dataType) => f.name
+    }.toSet
+    meta.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      .filter { c =>
+        val name = c.getPath.toArray
+        name.length == 1 && integral(name(0)) && (
+          c.getPrimitiveType.getLogicalTypeAnnotation match {
+            case null => true
+            case i: IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          })
+      }
+      .groupBy(_.getPath.toArray.head)
+      .collect { case (name, chunks) if chunks.size == meta.getBlocks.size &&
+          chunks.forall(_.getStatistics.hasNonNullValue) =>
+        val stats = chunks.map(_.getStatistics)
+        def num(v: Any) = v.asInstanceOf[Number].longValue
+        name -> (stats.map(s => num(s.genericGetMin)).min,
+          stats.map(s => num(s.genericGetMax)).max)
+      }
+  }
+
+  /** The [[FooterFacts]] [[openParquet]] recorded on `l`, if it did. */
+  private[graft] def footerFacts(l: LogicalRelation): Option[FooterFacts] =
+    l.catalogTable.flatMap { t =>
+      t.properties.get(RowsKey).map(rows => FooterFacts(rows.toLong,
+        t.properties.collect { case (k, v) if k.startsWith(RangeKey) =>
+          val Array(lo, hi) = v.split(',')
+          k.stripPrefix(RangeKey) -> (lo.toLong, hi.toLong)
+        }))
+    }
 
   /** `df`'s relation with `sizeInBytes = max(Spark's estimate, rows ×
     * EstimationUtils.getSizePerRow(output))`, carried as a size-only
-    * `CatalogStatistics` on the `LogicalRelation`; `df` itself when
-    * Spark's estimate is already the larger. The entry is named after
-    * the roots, so a row-sized scan shows in a plan as
-    * `Scan parquet lineitem.parquet`. It is never registered in a
-    * catalog, and canonicalization drops it, so cache lookups still match
-    * the same files. */
-  private def sizedByRows(df: DataFrame, rows: BigInt): DataFrame =
+    * `CatalogStatistics` on the `LogicalRelation`, together with `facts`
+    * as table properties. The entry is named after the roots, so the scan
+    * shows in a plan as `Scan parquet lineitem.parquet`. It is never
+    * registered in a catalog, and canonicalization drops it, so cache
+    * lookups still match the same files. */
+  private def sizedByRows(df: DataFrame, rows: BigInt,
+      facts: Option[FooterFacts]): DataFrame =
     df.queryExecution.analyzed match {
       case l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         val bytes = rows * EstimationUtils.getSizePerRow(l.output)
-        if (bytes <= fs.sizeInBytes) df
+        val recorded = facts.toSeq.flatMap { f =>
+          (RowsKey -> f.rows.toString) +: f.ranges.toSeq.map {
+            case (c, (lo, hi)) => (RangeKey + c) -> s"$lo,$hi"
+          }
+        }.toMap
+        if (bytes <= fs.sizeInBytes && recorded.isEmpty) df
         else GraftBridge.ofRows(df.sparkSession, l.copy(catalogTable = Some(
           CatalogTable(
             identifier = TableIdentifier(
@@ -177,7 +249,9 @@ object Tables {
             storage = CatalogStorageFormat.empty,
             schema = l.schema,
             provider = Some("parquet"),
-            stats = Some(CatalogStatistics(sizeInBytes = bytes))))))
+            properties = recorded,
+            stats = Some(CatalogStatistics(
+              sizeInBytes = bytes.max(fs.sizeInBytes)))))))
       case _ => df
     }
 
@@ -190,7 +264,7 @@ object Tables {
     val dir = new Path(dirPath)
     dir.getFileSystem(hadoopConf).listStatus(dir).iterator
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(readFooter(spark, _, hadoopConf)._2).sum
+      .map(st => rowCount(readFooter(spark, st, hadoopConf)._2)).sum
   }
 
   /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`): names

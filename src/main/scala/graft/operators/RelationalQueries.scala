@@ -28,16 +28,20 @@ object RelationalQueries {
   /** SIZE-GATED broadcast hint (guide §3.1): apply `broadcast(df)` only
     * when the on-disk bytes of the tables feeding `df` (Skew.advisoryFor's
     * probe) are under `limitBytes`. The planner no longer broadcasts
-    * lineitem ([[Tables.openParquet]] sizes it by its rows), but it sizes
-    * a join as the product of its inputs, so it cannot see that q30's
-    * filtered customer⋈orders subtree is small: it shuffles lineitem into
-    * a sort-merge join, and AQE broadcasts the subtree only after
-    * lineitem's shuffle is written. The hint broadcasts the subtree up
-    * front and streams lineitem (q30 at sf0.1, 4 cores: 0.69 s hinted,
-    * 0.93 s planner-only). At production scale the probe blows the limit
-    * and the plan stays planner-decided, so the hint can never demand an
-    * impossible broadcast. Default limit 256 MiB of source parquet ≈ well
-    * under the 8 GiB broadcast cap after filter+project. Conf
+    * lineitem ([[Tables.openParquet]] sizes it by its rows), and Spark
+    * sizes a join as the product of its inputs. [[SmallSideBroadcast]]
+    * bounds q30's customer⋈orders subtree by its larger input instead,
+    * but it has no filter selectivity: at sf1 the subtree's 1.5M orders
+    * rows stay over the broadcast threshold, so without this hint the
+    * planner shuffles lineitem into a sort-merge join and AQE broadcasts
+    * the subtree only after lineitem's shuffle is written. The hint
+    * broadcasts the subtree up front and streams lineitem (q30 at sf1,
+    * `tools.ScaleUp` ×10, 4 cores: 1.37 s hinted, 2.65 s planner-only;
+    * at sf0.1 the rule alone already broadcasts it). At production scale
+    * the probe blows the limit and the plan stays planner-decided, so
+    * the hint can never demand an impossible broadcast. Default limit
+    * 256 MiB of source parquet ≈ well under the 8 GiB broadcast cap after
+    * filter+project. Conf
     * `spark.graft.broadcastProbeLimit` overrides. */
   private def broadcastIfSmall(
       s: SparkSession, dir: String, tables: Seq[String])(
@@ -524,8 +528,9 @@ object RelationalQueries {
       // subtree — ~10× fewer rows after the 2-year date filter — is the
       // build side, size-gated via [[broadcastIfSmall]] so production
       // scale falls back to the planner. Without the hint the planner
-      // shuffles lineitem to a sort-merge join, since it cannot estimate
-      // the filtered subtree as small (see [[broadcastIfSmall]]). Same
+      // shuffles lineitem to a sort-merge join from sf1 on, since it
+      // cannot estimate the filtered subtree as small (see
+      // [[broadcastIfSmall]]). Same
       // joins, same predicates, identical output (driver hash
       // re-verified).
       (s, d) => {

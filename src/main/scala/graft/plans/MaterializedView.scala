@@ -1073,12 +1073,16 @@ object Mv {
   }
 
   /** Idempotently add [[MvRewrite]] to the session optimizer's
-    * user-rule batch. */
+    * user-rule batch, ahead of [[SmallSideBroadcast]]: the broadcast
+    * sizes the joins the rewrite leaves. */
   def install(spark: SparkSession): Unit = {
     val exp = spark
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(MvRewrite))
-      exp.extraOptimizations = exp.extraOptimizations :+ MvRewrite
+    if (!exp.extraOptimizations.contains(MvRewrite)) {
+      val (before, after) =
+        exp.extraOptimizations.span(_ != SmallSideBroadcast)
+      exp.extraOptimizations = (before :+ MvRewrite) ++ after
+    }
   }
 
   /** The optimizer rule. Matches registered (base, shape) pairs and

@@ -116,6 +116,7 @@ class BucketingSpec extends SparkSpec {
     assert(ctx.indexedScan("orders", "o_orderkey").count() == before)
     val work = java.nio.file.Files
       .createTempDirectory("ix_stale").toString
+    val fixture = spark.table("orders")
     try {
       // simulate a DML version bump: the copy-on-write store re-points
       // the view at a NEW directory — here, orders minus one key
@@ -139,8 +140,9 @@ class BucketingSpec extends SparkSpec {
         Tables.t(spark, sf, "customer").count())
       ctx2.dropIndex(Seq("spec_ix_stale"))
     } finally {
-      // restore the fixture view for later suites in this JVM
-      Tables.ensureRegistered(spark, sf)
+      // restore the fixture view for later suites in this JVM (the
+      // memoized Tables.ensureRegistered would not rebind it)
+      fixture.createOrReplaceTempView("orders")
       ctx.dropIndex(Seq("spec_ix_stale"))
     }
   }

@@ -16,24 +16,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * the final adaptive plan, after the statement has run. */
 class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  // the fixtures under names of this spec's own: other specs rebind the
-  // shared session's star-schema views (BucketingSpec leaves `orders`
-  // one row short)
-  private val tables = Seq("orders", "customer", "nation")
-
-  private def register(session: SparkSession): Unit = tables.foreach(t =>
-    Tables.openParquet(session, Tables.path(sf, t))
-      .createOrReplaceTempView(s"small_sort_$t"))
-
-  private lazy val ctx = {
-    val c = new ExecutionContext(spark)
-    register(spark)
-    c
-  }
+  private lazy val ctx = new ExecutionContext(spark).registerTestData(sf)
 
   private val grouped =
     "SELECT o_orderpriority, count(*) AS n, max(o_totalprice) AS top " +
-      "FROM small_sort_orders GROUP BY o_orderpriority " +
+      "FROM orders GROUP BY o_orderpriority " +
       "ORDER BY n DESC, o_orderpriority"
 
   /** Jobs `body` starts in `session`'s context, counted by a listener. */
@@ -92,7 +79,8 @@ class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
     val plain = spark.newSession()
     assert(plain.experimental.extraStrategies.isEmpty)
-    register(plain)
+    Seq("orders", "customer", "nation").foreach(t =>
+      Tables.load(plain, sf, t).createOrReplaceTempView(t))
     var plainDf: DataFrame = null
     val without = jobsOf(plain) {
       plainDf = plain.sql(grouped)
@@ -116,8 +104,8 @@ class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // a semi join is estimated at its left side's size, well under the
     // limit, so only the stage check declines here
     val (rows, ranges) = run(
-      "SELECT c_custkey, c_acctbal FROM small_sort_customer WHERE " +
-        "c_nationkey IN (SELECT n_nationkey FROM small_sort_nation " +
+      "SELECT c_custkey, c_acctbal FROM customer WHERE " +
+        "c_nationkey IN (SELECT n_nationkey FROM nation " +
         "WHERE n_regionkey = 1) " +
         "ORDER BY c_acctbal DESC, c_custkey")
     assert(ranges == 1)
@@ -150,10 +138,10 @@ class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "does not see") {
     val (rows, ranges) = run(
       "SELECT o_orderpriority, k FROM (SELECT o_orderpriority, " +
-        "collect_list(o_orderkey) AS ks FROM small_sort_orders GROUP BY " +
+        "collect_list(o_orderkey) AS ks FROM orders GROUP BY " +
         "o_orderpriority) LATERAL VIEW explode(ks) t AS k ORDER BY k")
     assert(ranges == 1)
-    assert(rows.size == ctx.table("small_sort_orders").count())
+    assert(rows.size == ctx.table("orders").count())
     val keys = rows.map(_.getAs[Number]("k").longValue)
     assert(keys == keys.sorted)
   }
